@@ -23,31 +23,17 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+# the parallelism floor for the text/JSON-heavy queries, whose sf tables
+# are single-row-group files; the fact-table aggregations skip it
+# (shuffling 131 MB of lineitem to win 6->32-way scan parallelism loses;
+# measured)
+from polars_genson_spark.session import spread_to_parallelism
+
 STOPWORDS_EN = ["the", "of", "and", "to", "in", "is", "that", "it", "was", "for"]
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def _spread(spark: SparkSession, df: DataFrame) -> DataFrame:
-    """Scan-parallelism floor for CPU-heavy per-row stages (guide §2.5
-    input skew, §6 input splits). The sf documents/events tables are
-    single parquet files with ONE row group, so whatever the split math
-    reports, only one scan task has rows — every regexp/shingle/JSON
-    kernel downstream of those scans ran on 1 core of 32 (measured:
-    the decontaminate shingle build was 1.56s scan-attached vs 0.27s
-    after an even repartition). Round-robin repartition to the session
-    default parallelism, only when the scan cannot provide it — the
-    exchange moves single-digit MBs here, and on a real deployment
-    where tables have >= cores row groups the condition is false and
-    this is a no-op. Used by the text/JSON-heavy queries, not the fact
-    -table aggregations (shuffling 131 MB of lineitem to win 6->32-way
-    scan parallelism loses; measured)."""
-    target = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
 
 
 # ---------------------------------------------------------------------------
@@ -58,7 +44,7 @@ def _spread(spark: SparkSession, df: DataFrame) -> DataFrame:
 def corpus_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents → the pre-tokenized corpus shape, fully JVM-side:
     tokens[i] = xxhash64(word_i) mod vocab (deterministic fake BPE)."""
-    docs = _spread(spark, _t(spark, sf_dir, "documents"))
+    docs = spread_to_parallelism(_t(spark, sf_dir, "documents"))
     words = F.split(
         F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " ")), " "
     )
@@ -280,7 +266,7 @@ def q_window_top2_orders(spark, sf_dir):
 
 
 def q_events_json(spark, sf_dir):
-    # no _spread: the guarded-regex kernel is ~1.2s single-core and the
+    # no spread: the guarded-regex kernel is ~1.2s single-core and the
     # round-robin exchange of 1M full rows costs more than it saves
     # (measured 1.22s unspread vs 2.31s project+repartition)
     e = _t(spark, sf_dir, "events")
@@ -303,7 +289,7 @@ def q_events_json(spark, sf_dir):
 
 
 def q_events_hourly(spark, sf_dir):
-    # no _spread: same trade-off as q_events_json (1.20s vs 2.70s)
+    # no spread: same trade-off as q_events_json (1.20s vs 2.70s)
     e = _t(spark, sf_dir, "events")
     hour = F.date_format(
         F.date_trunc("hour", F.col("ts")), "yyyy-MM-dd HH:mm:ss"
@@ -364,8 +350,7 @@ def q_word_jaccard_pairs(spark, sf_dir):
     cross-product — a hot shingle like "the" linked every doc)."""
     from polars_genson_spark.operators.dedup import ngram_jaccard_pairs
 
-    d = _spread(
-        spark,
+    d = spread_to_parallelism(
         _t(spark, sf_dir, "documents")
         .where(F.col("doc_id") < 300)
         .select(F.col("doc_id").cast("long").alias("doc_id"), "text"),
@@ -390,8 +375,7 @@ def q_minhash_verified_pairs(spark, sf_dir):
         verify_pairs_jaccard,
     )
 
-    d = _spread(
-        spark,
+    d = spread_to_parallelism(
         _t(spark, sf_dir, "documents")
         .where(F.col("doc_id") < 500)
         .select(F.col("doc_id").cast("long").alias("doc_id"), "text"),
@@ -416,8 +400,7 @@ def q_simhash_verified_pairs(spark, sf_dir):
         verify_pairs_jaccard,
     )
 
-    d = _spread(
-        spark,
+    d = spread_to_parallelism(
         _t(spark, sf_dir, "documents")
         .where(F.col("doc_id") < 500)
         .select(F.col("doc_id").cast("long").alias("doc_id"), "text"),
@@ -442,7 +425,7 @@ def q_embedding_topk(spark, sf_dir):
 def q_schema_infer_events_props(spark, sf_dir):
     from polars_genson_spark import infer_json_schema
 
-    # No _spread since the fold's first-occurrence cell cache landed
+    # No spread since the fold's first-occurrence cell cache landed
     # (operators/infer.py): repeated cell strings skip parse+observe, so
     # the per-task fold went from the bottleneck (48k docs/s) to
     # scan-speed, and the round-robin exchange of 1M props strings that
@@ -450,7 +433,7 @@ def q_schema_infer_events_props(spark, sf_dir):
     # measured at sf1.0/32 cores: 1.77s spread vs 0.51s unspread (the
     # spread exchange alone is 0.63s). High-cardinality corpora miss
     # the cache but also arrive in many-row-group files where the scan
-    # itself provides the parallelism _spread was compensating for.
+    # itself provides the parallelism the spread was compensating for.
     e = _t(spark, sf_dir, "events").select("props")
     res = infer_json_schema(e, "props")
     return spark.createDataFrame(
@@ -640,7 +623,8 @@ def q_sessions_30m(spark, sf_dir):
 def q_top_words_source(spark, sf_dir):
     from polars_genson_spark.operators.text import top_words
 
-    return top_words(_spread(spark, _t(spark, sf_dir, "documents")), k=5)
+    docs = spread_to_parallelism(_t(spark, sf_dir, "documents"))
+    return top_words(docs, k=5)
 
 
 def q_quantiles_nchars(spark, sf_dir):
@@ -676,7 +660,7 @@ def q_decontaminate_trigram(spark, sf_dir):
     trigrams with the (deterministic) benchmark slice doc_id % 29 == 0."""
     from polars_genson_spark.operators.decontaminate import contaminated_docs
 
-    docs = _spread(spark, _t(spark, sf_dir, "documents"))
+    docs = spread_to_parallelism(_t(spark, sf_dir, "documents"))
     benchmark = docs.where(F.col("doc_id") % 29 == 0)
     corpus = docs.where(F.col("doc_id") % 29 != 0)
     return contaminated_docs(corpus, benchmark, n=3, min_shared=3)
@@ -776,8 +760,8 @@ def q_fingerprint_verified(spark, sf_dir):
     # spread: the rolling 16-char shingle transform (up to 4096
     # xxhash64(substr) per doc) otherwise runs on the 1-2 tasks the
     # one-file slice scan provides — measured 17.4s -> ~1s at sf1.0
-    aug = _spread(
-        spark, base.select("text").unionByName(copies).unionByName(pads)
+    aug = spread_to_parallelism(
+        base.select("text").unionByName(copies).unionByName(pads)
     )
 
     fp = with_fingerprint(aug).withColumn(
@@ -847,8 +831,8 @@ def q_embedding_topk_lsh(spark, sf_dir):
 def q_simhash_near_pairs(spark, sf_dir):
     from polars_genson_spark.operators.dedup import simhash_candidates
 
-    d = _spread(
-        spark, _t(spark, sf_dir, "documents").where(F.col("doc_id") < 500)
+    d = spread_to_parallelism(
+        _t(spark, sf_dir, "documents").where(F.col("doc_id") < 500)
     )  # spread: same reasoning as q_minhash_verified_pairs
     return simhash_candidates(d, max_hamming=3)
 
@@ -920,8 +904,7 @@ def q_multimodal_features(spark, sf_dir):
 def q_minhash_near_dupes(spark, sf_dir):
     from polars_genson_spark.operators.dedup import minhash_candidates
 
-    d = _spread(
-        spark,
+    d = spread_to_parallelism(
         _t(spark, sf_dir, "documents")
         .where(F.col("doc_id") < 500)
         .select(F.col("doc_id").cast("string").alias("doc_id"), "text"),

@@ -220,6 +220,12 @@ def run_validation(
             report.verdicts.drop("_fp").write.mode("overwrite").option(
                 "partitionOverwriteMode", "dynamic"
             ).partitionBy(cfg.source_col).parquet(verd_dir)
+    if report is not None:
+        # the writes above were the last readers. Left cached, the frames
+        # would also be served by Spark's cache manager to a later
+        # validation in this session that reads the same (since changed)
+        # files, and its verdicts would be stale.
+        report.release()
 
     manifest = ckpt.build_manifest(
         fingerprints,
@@ -353,8 +359,7 @@ def bench_one(
             report = validate_corpus(corpus, allowed, cfg)
             finalise_summary(report)
             report.violations.count()
-            report.violations.unpersist()
-            report.verdicts.unpersist()
+            report.release()
 
         cleanup = None
     else:
@@ -646,18 +651,6 @@ def main(argv: list[str] | None = None) -> int:
     tk.add_argument("--output", required=True, help="token table parquet")
     tk.add_argument("--n-merges", type=int, default=500)
     tk.add_argument("--max-words", type=int, default=50_000)
-    tk.add_argument(
-        "--apply-method",
-        choices=["inplace", "vector", "join"],
-        default="inplace",
-        help="inplace: zero-shuffle mapInPandas per-word loop with a "
-             "seeded per-word cache (the measured default — see the "
-             "BENCH.md round-5 kernel A/B); vector: mapInArrow "
-             "ragged-gather reassembly (bit-identical output, measured "
-             "slower: factorize re-hashes every occurrence); join: "
-             "posexplode + segment unique words only + regroup (two "
-             "corpus shuffles)",
-    )
 
     b = sub.add_parser("bench-one", help="one pinned throughput measurement")
     b.add_argument("--rows", type=int, required=True)
@@ -836,7 +829,6 @@ def main(argv: list[str] | None = None) -> int:
         if args.cmd == "tokenize":
             from .operators.tokenizer import (
                 bpe_tokenize_ids,
-                bpe_tokenize_ids_join,
                 train_bpe_with_vocab,
             )
 
@@ -847,17 +839,9 @@ def main(argv: list[str] | None = None) -> int:
                 max_words=args.max_words,
                 return_words=True,
             )
-            method = getattr(args, "apply_method", "inplace")
-            if method == "join":
-                toks = bpe_tokenize_ids_join(docs, merges, vocab)
-            else:
-                # seed the apply cache with the training rollup's words:
-                # segmented once on the driver, broadcast once per
-                # executor
-                toks = bpe_tokenize_ids(
-                    docs, merges, vocab, seed_words=words,
-                    impl="vector" if method == "vector" else "loop",
-                )
+            # seed the apply cache with the training rollup's words:
+            # segmented once on the driver, broadcast once per executor
+            toks = bpe_tokenize_ids(docs, merges, vocab, seed_words=words)
             if "source" in docs.columns:
                 toks = toks.join(
                     docs.select("doc_id", "source"), "doc_id"
@@ -944,9 +928,7 @@ def main(argv: list[str] | None = None) -> int:
                 )
                 n_src = report.verdicts.count()
                 ok = report.verdicts.where(~F.col("passed")).count() == 0
-                report.verdicts.unpersist()
-                report.violations.unpersist()
-                report.unpersist_input()  # per-batch cache, else it leaks
+                report.release()  # per-batch caches, else they leak
                 batches.append(
                     {"batch": batch_id, "sources": n_src, "all_passed": ok}
                 )

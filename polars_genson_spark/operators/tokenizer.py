@@ -17,13 +17,18 @@ algorithm (Sennrich et al. 2016) in the shape a 100 TB pipeline needs:
   each distinct word is BPE-segmented once (Zipf makes the cache hit
   rate extreme on natural text). This is the honest Python path — a
   production deployment swaps the inner loop for a compiled tokenizer
-  with the SAME Spark plumbing. Measured boundary (``tools_bpe_kernel
-  .py``, 20k Zipf-vocab docs, transcribed in BENCH.md): ``_segment``
+  with the SAME Spark plumbing. Measured boundary (BENCH.md, "Round-5:
+  compiled-tokenizer swap-in boundary", 20k Zipf-vocab docs): ``_segment``
   costs ~9.5 μs/word but the cache hit rate is 96.7%, so the kernel
   owns only ~24–29% of apply-loop time; a 50× compiled ``_segment``
   projects to just 1.31–1.39× tokens/s. The real compiled win requires
   replacing the whole per-word loop (split + cache + extend), not the
-  segmentation kernel alone.
+  segmentation kernel alone. Two alternative apply paths were measured
+  against this loop and deleted (BENCH.md, "Round-5: BPE apply-kernel
+  A/B" and "Round-4 (cont.): BPE apply physical-strategy A/B"): an Arrow
+  ragged-gather kernel (0.56×: ``pd.factorize`` re-hashes every word
+  occurrence, the same work as the loop's cache probe) and a
+  posexplode + unique-word segment + regroup join (0.29–0.73×).
 
 Determinism: pair-count ties break lexicographically, so a merge table
 trained from the same rollup is identical on every run and machine.
@@ -35,6 +40,8 @@ import re
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..session import spread_to_parallelism
 
 END = "</w>"  # end-of-word marker (standard BPE word-boundary symbol)
 
@@ -48,12 +55,12 @@ _ASCII_WS = re.compile(r"[ \t\n\x0b\f\r]+")
 
 def _py_words(text: str | None) -> list[str]:
     # CASE-MAPPING caveat: Python str.lower() is locale-independent
-    # Unicode default casing, while the JVM side (F.lower in training and
-    # the join apply path) can be default-locale sensitive for a handful
-    # of code points (the Turkish dotless-i being the classic). On a
-    # cluster whose JVMs run a non-English default locale, pin
-    # -Duser.language=en (or pre-lowercase the corpus) so train and apply
-    # agree; ASCII corpora are unaffected.
+    # Unicode default casing, while the JVM side (F.lower in training)
+    # can be default-locale sensitive for a handful of code points (the
+    # Turkish dotless-i being the classic). On a cluster whose JVMs run
+    # a non-English default locale, pin -Duser.language=en (or
+    # pre-lowercase the corpus) so train and apply agree; ASCII corpora
+    # are unaffected.
     return [w for w in _ASCII_WS.split((text or "").lower()) if w]
 
 
@@ -149,45 +156,40 @@ def _segment(word: str, ranks: dict[tuple[str, str], int]) -> list[str]:
     return syms
 
 
-def _spread_for_apply(df: DataFrame) -> DataFrame:
-    """Parallelism floor for the mapInPandas/mapInArrow apply (guide
-    §2.5/§6): a single-file, single-row-group corpus arrives as ONE
-    non-empty scan partition, so the whole Python segmentation loop ran
-    in one worker while 31 cores idled. Round-robin repartition to the
-    session default parallelism when the input cannot provide it; the
-    exchange carries only (id, text). On a real deployment with
-    >= cores input partitions this is a no-op. Output rows are a pure
-    per-row map, so partitioning never changes results — only which
-    worker's cache segments which word."""
-    sc = df.sparkSession.sparkContext
-    if df.rdd.getNumPartitions() < sc.defaultParallelism:
-        return df.repartition(sc.defaultParallelism)
-    return df
-
-
-def _seed_broadcast(df: DataFrame, seed: dict | None):
-    """Broadcast the driver-precomputed word→segmentation dict (one copy
-    per executor, not per task — the dict is ~MBs at 50k words)."""
-    if not seed:
-        return None
-    return df.sparkSession.sparkContext.broadcast(seed)
-
-
-def _make_apply(
-    id_col: str,
+def _apply(
+    df: DataFrame,
+    segment_word,
+    token_type,
     text_col: str,
+    id_col: str,
     out_col: str,
     n_col: str,
-    seed_bc,
     cache_max: int,
-    segment_word,
-):
-    """The shared mapInPandas apply loop for both tokenize flavors
-    (token strings / token ids — they differ ONLY in ``segment_word``
-    and output column names, and the cache policy must never fork
+    seed_words: list[str] | None,
+    spread: bool,
+) -> DataFrame:
+    """The mapInPandas apply behind both tokenize flavors (token strings
+    / token ids — they differ ONLY in ``segment_word``, the token type
+    and the output column names, and the cache policy must never fork
     between them): seed lookup → per-partition cache with overflow
-    clear → segment → extend."""
+    clear → segment → extend. The seed is segmented on the driver and
+    broadcast (one copy per executor, not per task — the dict is ~MBs
+    at 50k words)."""
     import pandas as pd
+    from pyspark.sql import types as T
+
+    seed_map = {w: segment_word(w) for w in seed_words or ()}
+    seed_bc = (
+        df.sparkSession.sparkContext.broadcast(seed_map) if seed_map else None
+    )
+    # the id field keeps the INPUT's dtype — a string-id corpus (the
+    # shape the validate token table itself uses) would fail Arrow
+    # conversion against a hardcoded long
+    out_schema = T.StructType([
+        T.StructField(id_col, df.schema[id_col].dataType),
+        T.StructField(out_col, T.ArrayType(token_type)),
+        T.StructField(n_col, T.IntegerType()),
+    ])
 
     def run(batches):
         seed: dict = seed_bc.value if seed_bc else {}
@@ -211,114 +213,10 @@ def _make_apply(
                 ns.append(len(doc))
             yield pd.DataFrame({id_col: ids, out_col: toks, n_col: ns})
 
-    return run
-
-
-def _make_apply_arrow(
-    id_col: str,
-    text_col: str,
-    out_col: str,
-    n_col: str,
-    seed_bc,
-    cache_max: int,
-    segment_word,
-    token_pa_type,
-):
-    """Vectorized ``mapInArrow`` apply kernel — same contract as
-    :func:`_make_apply` (bit-identical output, pinned by
-    ``tests/test_bpe_vector.py``), different inner shape: instead of a
-    Python loop per word OCCURRENCE, each Arrow batch is
-
-    1. regex-split per doc (the one remaining per-doc Python step;
-       ``re`` runs in C),
-    2. ``pd.factorize`` over the flattened word stream (C hash — this
-       replaces the per-occurrence dict lookups),
-    3. seed/cache/segment per UNIQUE word only (the Zipf head collapses
-       here exactly as it does in the loop kernel's cache),
-    4. the per-occurrence token stream is reassembled with ragged-gather
-       index arithmetic (``np.repeat`` + cumsum) and a single Arrow
-       ``take`` — no per-token Python objects are ever created,
-    5. per-doc boundaries become ``ListArray`` offsets directly, so the
-       output RecordBatch is built zero-copy from the flat token array.
-
-    Cache policy parity: same ``seed`` → ``cache`` → segment order and
-    the same clear-on-overflow bound; the only difference is that misses
-    are discovered per unique word per batch rather than per occurrence,
-    which changes nothing observable (``segment_word`` is pure)."""
-    import numpy as np
-    import pandas as pd
-    import pyarrow as pa
-    from itertools import chain
-
-    def run(batches):
-        seed: dict = seed_bc.value if seed_bc else {}
-        cache: dict = {}
-        for batch in batches:
-            names = batch.schema.names
-            id_arr = batch.column(names.index(id_col))
-            texts = batch.column(names.index(text_col)).to_pylist()
-            word_lists = [_py_words(t) for t in texts]
-            n_words = np.fromiter(
-                (len(ws) for ws in word_lists),
-                dtype=np.int64,
-                count=len(word_lists),
-            )
-            flat_words = list(chain.from_iterable(word_lists))
-            if flat_words:
-                codes, uniques = pd.factorize(
-                    np.asarray(flat_words, dtype=object)
-                )
-                segs = []
-                for w in uniques:
-                    seg = seed.get(w)
-                    if seg is None:
-                        seg = cache.get(w)
-                    if seg is None:
-                        if len(cache) >= cache_max:
-                            cache.clear()
-                        seg = segment_word(w)
-                        cache[w] = seg
-                    segs.append(seg)
-                seg_lens = np.fromiter(
-                    (len(s) for s in segs), dtype=np.int64, count=len(segs)
-                )
-                # flat token table over UNIQUE words + start offsets
-                u_starts = np.zeros(len(segs) + 1, dtype=np.int64)
-                np.cumsum(seg_lens, out=u_starts[1:])
-                flat_unique = pa.array(
-                    list(chain.from_iterable(segs)), type=token_pa_type
-                )
-                # ragged gather: occurrence k (word code c) contributes
-                # tokens [u_starts[c], u_starts[c]+seg_lens[c]) at output
-                # position occ_starts[k]
-                occ_lens = seg_lens[codes]
-                occ_starts = np.zeros(len(codes) + 1, dtype=np.int64)
-                np.cumsum(occ_lens, out=occ_starts[1:])
-                total = int(occ_starts[-1])
-                out_idx = (
-                    np.arange(total, dtype=np.int64)
-                    - np.repeat(occ_starts[:-1], occ_lens)
-                    + np.repeat(u_starts[:-1][codes], occ_lens)
-                )
-                flat_tokens = flat_unique.take(pa.array(out_idx))
-                # doc boundaries in token space: word-space boundaries
-                # mapped through the occurrence-token cumsum
-                wb = np.zeros(len(word_lists) + 1, dtype=np.int64)
-                np.cumsum(n_words, out=wb[1:])
-                doc_offsets = occ_starts[wb]
-            else:
-                doc_offsets = np.zeros(len(word_lists) + 1, dtype=np.int64)
-                flat_tokens = pa.array([], type=token_pa_type)
-            ntok = np.diff(doc_offsets).astype(np.int32)
-            tokens_col = pa.ListArray.from_arrays(
-                pa.array(doc_offsets, type=pa.int32()), flat_tokens
-            )
-            yield pa.RecordBatch.from_arrays(
-                [id_arr, tokens_col, pa.array(ntok)],
-                [id_col, out_col, n_col],
-            )
-
-    return run
+    src = df.select(id_col, text_col)
+    if spread:
+        src = spread_to_parallelism(src)
+    return src.mapInPandas(run, out_schema)
 
 
 def bpe_tokenize(
@@ -329,7 +227,6 @@ def bpe_tokenize(
     out_col: str = "bpe_tokens",
     cache_max: int = 500_000,
     seed_words: list[str] | None = None,
-    impl: str = "loop",
     spread: bool = True,
 ) -> DataFrame:
     """(id, bpe_tokens array<string>, n_bpe) — merge table broadcast via
@@ -344,49 +241,16 @@ def bpe_tokenize(
     re-deriving it per partition per executor — train once, broadcast
     everywhere. The seed is immune to the overflow ``cache.clear()``.
 
-    ``impl``: ``"loop"`` (default) = the per-word-occurrence Python
-    loop; ``"vector"`` = the Arrow ragged-gather kernel
-    (:func:`_make_apply_arrow`; Python per unique word, token streams
-    assembled with numpy/Arrow). Bit-identical outputs, pinned by
-    ``tests/test_bpe_vector.py``. The loop is the default because the
-    measured A/B (BENCH.md round-5) has it 1.7-1.8x FASTER at the
-    representative operating point: ``pd.factorize`` re-hashes every
-    occurrence (exactly what the loop's cache-dict lookup already
-    does), so vectorization only relocates the per-occurrence hash
-    while adding an O(tokens) gather pass."""
-    import pyarrow as pa
+    ``spread``: repartition the input to the session's default
+    parallelism when it arrives in fewer partitions
+    (:func:`~polars_genson_spark.session.spread_to_parallelism`)."""
     from pyspark.sql import types as T
 
     ranks = {pair: i for i, pair in enumerate(merges)}
-    seed_bc = _seed_broadcast(
-        df, {w: _segment(w, ranks) for w in seed_words or ()}
+    return _apply(
+        df, lambda w: _segment(w, ranks), T.StringType(), text_col,
+        id_col, out_col, "n_bpe", cache_max, seed_words, spread,
     )
-    # the id field keeps the INPUT's dtype — a string-id corpus (the
-    # shape the validate token table itself uses) would fail Arrow
-    # conversion against a hardcoded long
-    out_schema = T.StructType([
-        T.StructField(id_col, df.schema[id_col].dataType),
-        T.StructField(out_col, T.ArrayType(T.StringType())),
-        T.StructField("n_bpe", T.IntegerType()),
-    ])
-
-    if impl == "vector":
-        run = _make_apply_arrow(
-            id_col, text_col, out_col, "n_bpe", seed_bc, cache_max,
-            lambda w: _segment(w, ranks), pa.string(),
-        )
-        src = df.select(id_col, text_col)
-        if spread:
-            src = _spread_for_apply(src)
-        return src.mapInArrow(run, out_schema)
-    run = _make_apply(
-        id_col, text_col, out_col, "n_bpe", seed_bc, cache_max,
-        lambda w: _segment(w, ranks),
-    )
-    src = df.select(id_col, text_col)
-    if spread:
-        src = _spread_for_apply(src)
-    return src.mapInPandas(run, out_schema)
 
 
 def bpe_vocabulary(merges: list[tuple[str, str]]) -> list[str]:
@@ -434,164 +298,17 @@ def bpe_tokenize_ids(
     id_col: str = "doc_id",
     cache_max: int = 500_000,
     seed_words: list[str] | None = None,
-    impl: str = "loop",
     spread: bool = True,
 ) -> DataFrame:
     """(doc_id, tokens array<int>, n_tok) — the pre-tokenized-corpus
     shape the validation engine consumes. Unknown tokens map to id 0.
-    Word split + cache + ``seed_words`` + ``impl`` policy identical to
+    Word split + cache + ``seed_words`` + ``spread`` policy identical to
     :func:`bpe_tokenize`."""
-    import pyarrow as pa
     from pyspark.sql import types as T
 
     ranks = {pair: i for i, pair in enumerate(merges)}
-    seed_bc = _seed_broadcast(
-        df,
-        {
-            w: [vocab.get(s, 0) for s in _segment(w, ranks)]
-            for w in seed_words or ()
-        },
-    )
-    out_schema = T.StructType([
-        T.StructField(id_col, df.schema[id_col].dataType),
-        T.StructField("tokens", T.ArrayType(T.IntegerType())),
-        T.StructField("n_tok", T.IntegerType()),
-    ])
-
-    segment_ids = lambda w: [vocab.get(s, 0) for s in _segment(w, ranks)]
-    if impl == "vector":
-        run = _make_apply_arrow(
-            id_col, text_col, "tokens", "n_tok", seed_bc, cache_max,
-            segment_ids, pa.int32(),
-        )
-        src = df.select(id_col, text_col)
-        if spread:
-            src = _spread_for_apply(src)
-        return src.mapInArrow(run, out_schema)
-    run = _make_apply(
-        id_col, text_col, "tokens", "n_tok", seed_bc, cache_max,
-        segment_ids,
-    )
-
-    src = df.select(id_col, text_col)
-    if spread:
-        src = _spread_for_apply(src)
-    return src.mapInPandas(run, out_schema)
-
-
-def bpe_tokenize_ids_join(
-    df: DataFrame,
-    merges: list[tuple[str, str]],
-    vocab: dict[str, int],
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Same output contract as :func:`bpe_tokenize_ids`, different
-    physical strategy: Python touches only the corpus's UNIQUE words.
-
-    1. ``posexplode`` the JVM word split (corpus-sized, zero Python),
-    2. ``distinct`` the words (map-side combined — the shuffle carries
-       the unique vocabulary, not the corpus),
-    3. segment the unique words in one ``mapInPandas`` (Python cost is
-       O(unique words), immune to the Zipf tail re-derivation the
-       in-place cache pays per partition per executor),
-    4. join the segment table back onto the exploded words (AQE picks
-       broadcast when the vocabulary is small and splits the skewed
-       hot-word keys — "the" lands on one join key — when it is not),
-    5. regroup per doc in the JVM: ``array_sort(collect_list(struct(pos,
-       ids)))`` then flatten, so token order is exact without any
-       Python-side reassembly.
-
-    Trade-off vs the in-place path: this shuffles the corpus twice
-    (distinct + regroup) but removes ALL per-document Python; the
-    in-place path is zero-shuffle but pays Python per word occurrence
-    (amortized by its cache). Which wins is corpus-shaped — natural text
-    with a fat Zipf head favors in-place, heavy-unique-word corpora
-    (code, URLs, hashes) favor join. `jobs tokenize --apply-method`
-    exposes both; BENCH.md records the measured A/B.
-
-    Word split/lowercase parity: steps 1–3 reuse the SAME JVM
-    expression (`text._words`) as training, so join-apply can never
-    disagree with the learned merges on word boundaries."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    from .text import _words
-
-    # PRECONDITION (checked, fail-loud): ids must be unique. The regroup
-    # below is groupBy(id), so two rows sharing an id would silently
-    # interleave their token streams into one corrupted array — unlike
-    # the in-place path, which is row-wise and tolerates duplicates. The
-    # check is one column-pruned scan of the id column (map-combined
-    # rollup); the validation engine itself flags duplicate ids as a
-    # violation, so a clean corpus pays the scan and nothing else.
-    dup = (
-        df.groupBy(id_col)
-        .agg(F.count(F.lit(1)).alias("n"))
-        .where(F.col("n") > 1)
-        .limit(1)
-        .count()
-    )
-    if dup:
-        raise ValueError(
-            f"bpe_tokenize_ids_join requires unique {id_col!r} values "
-            "(the per-doc regroup would interleave duplicate ids' "
-            "tokens); deduplicate first or use the in-place "
-            "bpe_tokenize_ids, which is row-wise"
-        )
-
-    ranks = {pair: i for i, pair in enumerate(merges)}
-
-    words = df.select(
-        F.col(id_col),
-        F.posexplode(_words(text_col)).alias("pos", "word"),
-    ).where(F.col("word") != "")
-
-    seg_schema = T.StructType([
-        T.StructField("word", T.StringType()),
-        T.StructField("word_ids", T.ArrayType(T.IntegerType())),
-    ])
-
-    def seg_run(batches):
-        for pdf in batches:
-            yield pd.DataFrame({
-                "word": pdf["word"],
-                "word_ids": [
-                    [vocab.get(s, 0) for s in _segment(w, ranks)]
-                    for w in pdf["word"]
-                ],
-            })
-
-    seg = words.select("word").distinct().mapInPandas(seg_run, seg_schema)
-
-    per_doc = (
-        words.join(seg, "word")
-        .groupBy(id_col)
-        .agg(
-            F.flatten(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "word_ids"))),
-                    lambda s: s["word_ids"],
-                )
-            ).alias("tokens")
-        )
-    )
-    # docs with no words (empty/NULL text) vanish at the explode; left
-    # join restores them with an empty token array, matching the
-    # in-place path's output exactly. The join is NULL-SAFE: a (single)
-    # NULL-id row regroups under the NULL key, and plain equality would
-    # never match it back — silently emitting [] where the row-wise
-    # in-place path tokenizes normally
-    base = df.select(id_col)
-    return (
-        base.join(
-            per_doc, base[id_col].eqNullSafe(per_doc[id_col]), "left"
-        )
-        .select(
-            base[id_col],
-            F.coalesce(
-                per_doc["tokens"], F.array().cast("array<int>")
-            ).alias("tokens"),
-        )
-        .withColumn("n_tok", F.size("tokens").cast("int"))
+    return _apply(
+        df, lambda w: [vocab.get(s, 0) for s in _segment(w, ranks)],
+        T.IntegerType(), text_col, id_col, "tokens", "n_tok", cache_max,
+        seed_words, spread,
     )

@@ -17,6 +17,12 @@ so per-source counts, the verdicts join, and any downstream
 ``violations.count()``/write reuse it instead of recomputing the scans.
 Drift runs on the KB-sized histogram rollup. Everything else is
 metadata-sized.
+
+The suite runs serially: ``validate_corpus`` plans the stats, violation
+and duplicate passes lazily, collects the drift histogram (the one job
+it runs itself) and returns; the remaining passes run when the persisted
+verdicts frame is first read (``finalise_summary``, or the caller's
+writes).
 """
 
 from __future__ import annotations
@@ -50,10 +56,8 @@ class ValidationReport:
     drift: list[dict]
     summary: dict[str, Any] = field(default_factory=dict)
     # the input frame validate_corpus persisted for its multi-pass scan
-    # (None when the caller had already cached it) plus any small
-    # intermediate caches (the stats rollup) it warmed for overlap
+    # (None when the caller had already cached it)
     _input_cache: DataFrame | None = None
-    _aux_caches: list[DataFrame] = field(default_factory=list)
 
     def passed(self) -> bool:
         return bool(self.summary.get("all_passed"))
@@ -62,9 +66,13 @@ class ValidationReport:
         if self._input_cache is not None:
             self._input_cache.unpersist()
             self._input_cache = None
-        for c in self._aux_caches:
-            c.unpersist()
-        self._aux_caches = []
+
+    def release(self) -> None:
+        """Unpersist everything the report holds: the input cache, the
+        verdicts and the violations. Call once the last reader is done."""
+        self.unpersist_input()
+        self.verdicts.unpersist()
+        self.violations.unpersist()
 
 
 def validate_corpus(
@@ -226,31 +234,6 @@ def validate_corpus(
         )
     violations = violations.persist()
 
-    # ---- drift histogram, submitted CONCURRENTLY (guide §2.6) ----
-    # The drift rollup and the violations materialisation are
-    # independent jobs; running them from two driver threads lets the
-    # scheduler back-fill the tail of one with tasks of the other
-    # (FIFO scheduling gives exactly that). The violations count below
-    # warms the persisted frame it must materialise anyway (every
-    # verdict assembly reads it); the drift result is joined after.
-    drift_future = None
-    drift_pool = None
-    if cfg.check_drift:
-        from concurrent.futures import ThreadPoolExecutor
-
-        drift_pool = ThreadPoolExecutor(max_workers=2)
-        drift_src = drift_reference if drift_reference is not None else df
-        drift_future = drift_pool.submit(
-            lambda: token_id_histogram(drift_src, cfg).collect()
-        )
-        # the stats rollup is independent too: persist it (20-ish rows)
-        # and warm it from the second pool slot, so the three suite jobs
-        # (drift / stats / violations+dup) run concurrently and the
-        # final verdict assembly only joins cached results
-        base = base.persist()
-        drift_pool.submit(base.count)
-        violations.count()  # overlaps with the drift + stats jobs
-
     # ---- per-source violation counts from the persisted frame ----
     is_check = lambda name: (c("check") == name).cast("long")  # noqa: E731
     count_cols = []
@@ -270,13 +253,11 @@ def validate_corpus(
         else None
     )
 
-    # ---- drift (KB-sized rollup → driver; job launched above) ----
+    # ---- drift (KB-sized rollup → driver) ----
     drift: list[dict] = []
-    if drift_future is not None:
-        try:
-            hist = drift_future.result()
-        finally:
-            drift_pool.shutdown(wait=False)
+    if cfg.check_drift:
+        drift_src = drift_reference if drift_reference is not None else df
+        hist = token_id_histogram(drift_src, cfg).collect()
         drift = drift_from_histogram((r.asDict() for r in hist), cfg)
     if drift:
         drift_df = spark.createDataFrame(
@@ -323,14 +304,12 @@ def validate_corpus(
         pass_expr = pass_expr & (~c("drifted"))
     verdicts = verdicts.withColumn("passed", pass_expr).persist()
 
-    report = ValidationReport(
+    return ValidationReport(
         verdicts=verdicts,
         violations=violations,
         drift=drift,
         _input_cache=df if _own_cache else None,
-        _aux_caches=[base] if cfg.check_drift else [],
     )
-    return report
 
 
 def finalise_summary(report: ValidationReport) -> dict[str, Any]:

@@ -188,64 +188,6 @@ def test_driver_query_bpe_roundtrip_matches_oracle(spark):
     assert got == oracle and len(got) > 0
 
 
-def test_join_apply_matches_inplace(spark):
-    """The all-JVM join apply path must be row-for-row identical to the
-    in-place mapInPandas path — same ids, same token sequences — on real
-    docs plus the empty/NULL/whitespace edges the explode step drops."""
-    from pyspark.sql import functions as F
-
-    from polars_genson_spark.operators.tokenizer import (
-        bpe_tokenize_ids,
-        bpe_tokenize_ids_join,
-        train_bpe_with_vocab,
-    )
-
-    docs = spark.read.parquet(
-        "/root/testdata/sf0.001/documents.parquet"
-    ).select("doc_id", "text")
-    edges = spark.createDataFrame(
-        [(100001, ""), (100002, None), (100003, "   "), (100004, "one")],
-        "doc_id long, text string",
-    )
-    df = docs.unionByName(edges)
-    merges, vocab, words = train_bpe_with_vocab(
-        df, n_merges=40, return_words=True
-    )
-    inplace = {
-        r["doc_id"]: (r["tokens"], r["n_tok"])
-        for r in bpe_tokenize_ids(
-            df, merges, vocab, seed_words=words
-        ).collect()
-    }
-    joined = {
-        r["doc_id"]: (r["tokens"], r["n_tok"])
-        for r in bpe_tokenize_ids_join(df, merges, vocab).collect()
-    }
-    assert set(inplace) == set(joined)
-    assert inplace == joined
-    assert joined[100001] == ([], 0) and joined[100002] == ([], 0)
-
-
-def test_join_apply_rejects_duplicate_ids(spark):
-    """The join path's regroup is groupBy(id); duplicate ids would
-    silently interleave two docs' tokens, so it must fail loud (the
-    in-place path is row-wise and tolerates them)."""
-    from polars_genson_spark.operators.tokenizer import (
-        bpe_tokenize_ids,
-        bpe_tokenize_ids_join,
-        train_bpe_with_vocab,
-    )
-
-    df = spark.createDataFrame(
-        [(5, "a b"), (5, "c d"), (6, "e f")], "doc_id long, text string"
-    )
-    merges, vocab = train_bpe_with_vocab(df, n_merges=5)
-    with pytest.raises(ValueError, match="unique"):
-        bpe_tokenize_ids_join(df, merges, vocab)
-    # in-place: one output row per input row, duplicates preserved
-    assert bpe_tokenize_ids(df, merges, vocab).count() == 3
-
-
 def test_driver_bpe_roundtrip_excludes_literal_marker(spark):
     """A doc whose TEXT contains the literal '</w>' string is excluded
     from the roundtrip gate on both sides (after concat it is
@@ -267,35 +209,3 @@ def test_driver_bpe_roundtrip_excludes_literal_marker(spark):
     assert out.count() == con.execute(
         f"SELECT count(*) FROM ({sql})"
     ).fetchone()[0]
-
-
-def test_join_apply_null_id_parity(spark):
-    """A single NULL-id row must tokenize identically through both apply
-    paths (the restore join is null-safe); two NULL-id rows hit the
-    duplicate-id guard (they regroup together)."""
-    from polars_genson_spark.operators.tokenizer import (
-        bpe_tokenize_ids,
-        bpe_tokenize_ids_join,
-        train_bpe_with_vocab,
-    )
-
-    df = spark.createDataFrame(
-        [(None, "low lower"), (1, "newest widest")],
-        "doc_id long, text string",
-    )
-    merges, vocab = train_bpe_with_vocab(df, n_merges=10)
-    a = {
-        r["doc_id"]: (r["tokens"], r["n_tok"])
-        for r in bpe_tokenize_ids(df, merges, vocab).collect()
-    }
-    b = {
-        r["doc_id"]: (r["tokens"], r["n_tok"])
-        for r in bpe_tokenize_ids_join(df, merges, vocab).collect()
-    }
-    assert a == b and a[None][1] > 0
-
-    two_nulls = spark.createDataFrame(
-        [(None, "a b"), (None, "c d")], "doc_id long, text string"
-    )
-    with pytest.raises(ValueError, match="unique"):
-        bpe_tokenize_ids_join(two_nulls, merges, vocab)
