@@ -206,10 +206,10 @@ def q3_top_orders(spark, sf_dir):
     # by construction: the same two doubles are multiplied per row and
     # the join/aggregation order is unchanged (the product moves below
     # the exchange, the sum stays above it); proven row-identical vs
-    # the post-join form at sf0.001-1.0 (tools_r06_ab.py) and by the
-    # unchanged DuckDB oracle. Pre-AGGREGATING lineitem by orderkey was
-    # considered and rejected: it reorders the float additions (ADVICE
-    # r05's half-cent-boundary hazard class).
+    # the post-join form at sf0.001-1.0 (recorded in OPTIMIZATION_r06.md)
+    # and by the unchanged DuckDB oracle. Pre-AGGREGATING lineitem by
+    # orderkey was considered and rejected: it reorders the float
+    # additions (ADVICE r05's half-cent-boundary hazard class).
     li = _t(spark, sf_dir, "lineitem").select(
         "l_orderkey",
         (F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias(
@@ -1861,8 +1861,8 @@ def q_range_join_events(spark, sf_dir):
     ``n_next >= 1`` filter reproduces the inner join dropping events
     with no neighbour. event_id is unique in the events table (its PK),
     so per-row counts equal the groupBy counts. Equivalence proven
-    against the old plan at sf0.001/0.01/0.1/1.0 (tools_r06_ab.py) and
-    by the unchanged DuckDB oracle."""
+    against the old plan at sf0.001/0.01/0.1/1.0 (recorded in
+    OPTIMIZATION_r06.md) and by the unchanged DuckDB oracle."""
     from polars_genson_spark.operators.relational import range_count
 
     e = _t(spark, sf_dir, "events")

@@ -98,14 +98,12 @@ def save_manifest(run_dir: str, manifest: dict[str, Any], spark=None) -> str:
 
 # Fields with NO effect on verdicts or recorded metrics — pure execution
 # knobs. Hashing them would invalidate every resume skip on a tuning rerun
-# (e.g. a different shuffle_partitions or the arrow histogram kernel),
+# (e.g. a different salting factor or the arrow histogram kernel),
 # revalidating the whole corpus even though no check rule changed.
 _PERF_ONLY_FIELDS = frozenset(
     {
-        "shuffle_partitions",
         "salt_buckets",
         "hist_impl",
-        "repartition_by_range",
         "max_violation_examples",  # bounds the example WRITE, not counts
     }
 )

@@ -117,10 +117,7 @@ class ValidationConfig:
     # silently waive the null budget
     max_null_rate: float = 0.0
     hll_rsd: float = 0.02  # approx_count_distinct relative std dev
-    bloom_fpp: float = 0.01
     max_violation_examples: int = 1000
 
     # Scale / skew knobs
-    shuffle_partitions: int | None = None
     salt_buckets: int = 8  # salting factor for skewed source keys
-    repartition_by_range: bool = True

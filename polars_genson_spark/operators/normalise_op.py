@@ -10,10 +10,15 @@ the SAME Avro schema to build the Spark ``StructType`` — single pass.
 
 Scale: the schema is a broadcast of a KB-sized dict; normalisation is
 embarrassingly parallel (no shuffle); `from_json` decode is JVM-side.
+Repeated cells are skipped by per-task caches, not by a second route:
+the inference fold skips a cell it has already seen in its partition,
+and the normalise UDF keeps a bounded cell->output cache, so a
+replicated corpus costs one parse+normalise per distinct cell per task.
 """
 
 from __future__ import annotations
 
+import dataclasses
 import json
 from typing import Any, Iterator
 
@@ -40,69 +45,20 @@ def normalise_json(
     """Return ``df`` with ``column`` replaced (or ``output_col`` added) by
     schema-normalised JSON text; with ``decode=True`` the normalised JSON is
     decoded to native nested columns via ``from_json``.
+
+    One path: infer the Avro schema over ``df`` (unless ``avro_schema``
+    is given), apply the normalise UDF, then optionally decode and
+    unnest. Repeated cells are skipped by the per-task caches of the
+    inference fold and the UDF; nothing is persisted or checkpointed.
     """
     config = config or InferenceConfig()
     norm = norm or NormaliseConfig(wrap_root=config.wrap_root)
     out_name = output_col or column
 
-    # Distinct-route decision FIRST (details at the route below): when
-    # it fires, schema inference also runs over the checkpointed
-    # DISTINCT cells — the inferred schema is replication-invariant
-    # (object.count never reaches to_schema; pinned by
-    # tests/test_r06_dedup_routes.py), and normalise_json only consumes
-    # .schema, so inferring over 1k distinct docs instead of 100k rows
-    # removes the dominant part of this call's cost on replicated
-    # corpora. Strict-mode inference still raises on any invalid cell
-    # (it is present in the distinct set too); only the row index in
-    # the error text refers to the distinct stream.
-    dedup_candidate = (
-        "__pgs_cell" not in df.columns
-        and "__pgs_norm" not in df.columns
-        # tiny frames (unit replays, the <=100-row decode queries) skip
-        # the sampling job outright: partition count is a free proxy
-        # for "big enough that one extra small job can pay for itself"
-        and df.rdd.getNumPartitions() >= 8
-    )
-    sample_cap = 10_000
-    if dedup_candidate:
-        s = (
-            df.select(F.col(column).alias("__pgs_cell"))
-            .limit(sample_cap)
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.approx_count_distinct("__pgs_cell").alias("d"),
-            )
-            .first()
-        )
-        dedup_candidate = s["n"] >= sample_cap and s["d"] <= 0.5 * s["n"]
-    uniq = None
-    if dedup_candidate:
-        # materialise the distinct cells ONCE (localCheckpoint): the
-        # safety count, the optional inference pass, and the broadcast
-        # build all read it without recomputing the distinct shuffle.
-        # A lying sample wastes this rollup but never produces a wrong
-        # answer or an oversized broadcast (budget check below).
-        uniq = (
-            df.select(F.col(column).alias("__pgs_cell"))
-            .where(F.col("__pgs_cell").isNotNull())
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        # broadcast-relation budget, not a tuning knob: past this the
-        # executors would each hold the full mapped table
-        if uniq.count() > 200_000:
-            uniq = None
-
     if avro_schema is None:
         # single inference pass, Avro forced (expressions.rs:489-511)
-        import dataclasses
-
         avro_cfg = dataclasses.replace(config, avro=True)
-        infer_src = uniq if uniq is not None else df
-        infer_col = "__pgs_cell" if uniq is not None else column
-        avro_schema = infer_json_schema(
-            infer_src, infer_col, avro_cfg
-        ).schema
+        avro_schema = infer_json_schema(df, column, avro_cfg).schema
 
     spark = df.sparkSession
     schema_bc = spark.sparkContext.broadcast(json.dumps(avro_schema))
@@ -126,7 +82,7 @@ def normalise_json(
         # a byte budget so huge-cardinality corpora cannot blow worker
         # memory. Replicated-doc corpora (the reference's own labels
         # macro bench is 1000 distinct docs x 100 copies) collapse to
-        # one kernel run per distinct doc.
+        # one kernel run per distinct doc per task.
         kernel = compile_document_normaliser(
             json.loads(schema_bc.value), cfg
         )
@@ -157,7 +113,7 @@ def normalise_json(
         for col in batches:
             yield col.map(one)
 
-    dtype = None
+    result = df.withColumn(out_name, _normalise(F.col(column)))
     if decode:
         from ..config import MAP_ENCODING_ENTRIES, MAP_ENCODING_KV
 
@@ -175,42 +131,9 @@ def normalise_json(
         dtype = avro_to_spark_schema(
             avro_schema, kv_encoding=norm.map_encoding == MAP_ENCODING_KV
         )
-
-    dedup_map = None
-    if uniq is not None:
-        # distinct-route (guide §8 "decide with small rows"): the
-        # Python kernel — and the from_json decode — run once per
-        # DISTINCT cell (the checkpointed `uniq`); rows receive their
-        # result through the broadcast join below. Route choice cannot
-        # change results: normalisation is a pure function of the cell
-        # under a fixed schema+config (pinned by
-        # tests/test_r06_dedup_routes.py: route parity plain + decode,
-        # null/blank/unparseable via the join).
-        dedup_map = uniq.withColumn(
-            "__pgs_norm", _normalise(F.col("__pgs_cell"))
+        result = result.withColumn(
+            out_name, F.from_json(F.col(out_name), dtype)
         )
-        if dtype is not None:
-            dedup_map = dedup_map.withColumn(
-                "__pgs_norm", F.from_json(F.col("__pgs_norm"), dtype)
-            )
-
-    if dedup_map is not None:
-        result = (
-            df.join(
-                F.broadcast(dedup_map),
-                F.col(column) == F.col("__pgs_cell"),
-                "left",
-            )
-            .drop("__pgs_cell")
-            .withColumn(out_name, F.col("__pgs_norm"))
-            .drop("__pgs_norm")
-        )
-    else:
-        result = df.withColumn(out_name, _normalise(F.col(column)))
-        if dtype is not None:
-            result = result.withColumn(
-                out_name, F.from_json(F.col(out_name), dtype)
-            )
 
     if decode and unnest:
         other = [c for c in result.columns if c != out_name]
@@ -225,8 +148,6 @@ def normalise_json_with_result(
     norm: NormaliseConfig | None = None,
 ) -> tuple[DataFrame, InferenceResult]:
     """Like :func:`normalise_json` but also returns the inference result."""
-    import dataclasses
-
     config = config or InferenceConfig()
     avro_cfg = dataclasses.replace(config, avro=True)
     res = infer_json_schema(df, column, avro_cfg)

@@ -175,17 +175,15 @@ def test_run_streaming_validation_default_path_validates(spark, tmp_path):
 
 
 def test_config_fingerprint_ignores_perf_knobs():
-    """Tuning knobs (shuffle partitions, salting, histogram kernel,
-    example cap) must not invalidate resume skips; rule knobs must."""
+    """Tuning knobs (salting, histogram kernel, example cap) must not
+    invalidate resume skips; rule knobs must."""
     from polars_genson_spark.checkpoint import config_fingerprint
 
     base = config_fingerprint(ValidationConfig())
     assert base == config_fingerprint(
         ValidationConfig(
-            shuffle_partitions=7,
             salt_buckets=99,
             hist_impl="arrow",
-            repartition_by_range=False,
             max_violation_examples=5,
         )
     )
