@@ -36,11 +36,7 @@ Semantics ported (behaviour, not code) from:
 from __future__ import annotations
 
 import copy
-from typing import Any
-
-SCALAR_KINDS = ("null", "boolean", "number", "string")
-COMPLEX_KINDS = ("array", "object")
-
+from typing import Any, Iterable
 
 def new_summary() -> dict[str, Any]:
     """The monoid identity: a summary that has observed nothing."""
@@ -126,10 +122,10 @@ def merge(a: dict[str, Any], b: dict[str, Any]) -> dict[str, Any]:
     for kind, bs in b.items():
         as_ = a.get(kind)
         if as_ is None:
-            # REAL deep copy, not an alias: a[kind] = bs shares state, so
-            # a later observe/merge into `a` silently mutates `b` — the
-            # hazard incremental.py once worked around with a JSON
-            # round-trip at its call site
+            # REAL deep copy, not an alias (here and for adopted items
+            # and props below): sharing state would let a later
+            # observe/merge into `a` silently mutate `b`, e.g. a stored
+            # per-file summary of the incremental state
             a[kind] = copy.deepcopy(bs)
             continue
         if kind == "number":
@@ -138,7 +134,7 @@ def merge(a: dict[str, Any], b: dict[str, Any]) -> dict[str, Any]:
         elif kind == "array":
             if bs["items"] is not None:
                 if as_["items"] is None:
-                    as_["items"] = bs["items"]
+                    as_["items"] = copy.deepcopy(bs["items"])
                 else:
                     merge(as_["items"], bs["items"])
         elif kind == "object":
@@ -148,7 +144,7 @@ def merge(a: dict[str, Any], b: dict[str, Any]) -> dict[str, Any]:
                 if k in props:
                     merge(props[k], sub)
                 else:
-                    props[k] = sub
+                    props[k] = copy.deepcopy(sub)
             br = bs["required"]
             ar = as_["required"]
             if ar is None:
@@ -158,6 +154,22 @@ def merge(a: dict[str, Any], b: dict[str, Any]) -> dict[str, Any]:
                 as_["required"] = [k for k in ar if k in present]
         # null/boolean/string: presence-only, nothing to merge
     return a
+
+
+def merge_distinct(nodes: Iterable[dict[str, Any]]) -> dict[str, Any]:
+    """Merge ``nodes`` in order into a new summary, each distinct one
+    (by ``summary_key``) once: A6, as reference schema.rs:429-432 adds
+    each xxh64-distinct schema once. ``merge`` is idempotent on equal
+    structures, so this equals merging them all; the canonical string
+    key has no collision risk. ``nodes`` are not modified."""
+    out = new_summary()
+    seen: set[str] = set()
+    for node in nodes:
+        key = summary_key(node)
+        if key not in seen:
+            seen.add(key)
+            merge(out, node)
+    return out
 
 
 def _scalar_schema_type(kind: str, state: dict[str, Any]) -> str:
@@ -215,11 +227,3 @@ def _complex_to_schema(kind: str, state: dict[str, Any]) -> dict[str, Any]:
         schema["required"] = sorted(req)
     return schema
 
-
-def summarise_documents(docs, node: dict[str, Any] | None = None) -> dict[str, Any]:
-    """Fold an iterable of parsed JSON documents into one summary."""
-    if node is None:
-        node = new_summary()
-    for doc in docs:
-        observe(node, doc)
-    return node

@@ -26,7 +26,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import ValidationConfig
-from .stats import token_id_histogram
 
 
 # ---------------------------------------------------------------------------
@@ -364,14 +363,6 @@ def drift_from_histogram(
     return out
 
 
-def drift_check(
-    df: DataFrame, cfg: ValidationConfig | None = None
-) -> list[dict]:
-    cfg = cfg or ValidationConfig()
-    hist = token_id_histogram(df, cfg).collect()
-    return drift_from_histogram((r.asDict() for r in hist), cfg)
-
-
 def psi_drift(
     df: DataFrame,
     value_col: str,
@@ -402,11 +393,9 @@ def psi_drift(
         F.col(group_col).alias("grp"),
         F.floor(F.col(value_col) / F.lit(bucket_width)).alias("bucket"),
     )
-    # persisted intermediate is the (group, bucket) rollup — KB-sized and
-    # bounded by |groups|x|buckets| regardless of corpus size, so a
-    # long-lived session accumulates negligible, evictable cache
+    # the (group, bucket) rollup feeds four branches of the one plan;
+    # exchange reuse computes its shuffle once, with no cache to release
     counts = b.groupBy("grp", "bucket").agg(F.count(F.lit(1)).alias("c"))
-    counts = counts.persist()
     totals = counts.groupBy("grp").agg(F.sum("c").alias("n_g"))
     overall = counts.groupBy("bucket").agg(F.sum("c").alias("c_b"))
     grand = counts.agg(F.sum("c").alias("g"))
@@ -454,11 +443,8 @@ def psi_temporal(
         day.alias("day"),
         F.floor(F.col(value_col) / F.lit(bucket_width)).alias("bucket"),
     )
-    # rollup-sized persist (|days|x|buckets|), same bounded-cache note
-    # as psi_drift
-    counts = b.groupBy("day", "bucket").agg(
-        F.count(F.lit(1)).alias("c")
-    ).persist()
+    # shared by the branches below through exchange reuse, like psi_drift
+    counts = b.groupBy("day", "bucket").agg(F.count(F.lit(1)).alias("c"))
     totals = counts.groupBy("day").agg(F.sum("c").alias("n"))
     cur = (
         counts.join(totals, "day")

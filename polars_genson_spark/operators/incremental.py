@@ -7,35 +7,38 @@ dataset never needs to rescan old files: fold ONLY the new files, merge
 with the stored per-file summaries, re-derive the schema. State is a
 JSON sidecar of {file → summary} — KB-sized per file, independent of row
 count — so a 100 TB corpus that grows by one partition per hour pays one
-partition of work per hour, not a full rescan.
+partition of work per hour, not a full rescan. The sidecar is read and
+written through ``fsutil`` like the checkpoint manifest, so the state
+directory may be any URI Spark's Hadoop conf knows (file://, s3a://, ...).
 
 This is the engine-native generalisation of the reference's incremental
 builder (genson-rs folds docs into one SchemaBuilder in memory;
 schema.rs:240-280): here the fold state is durable and distributed-
 mergeable across job runs.
 
-Per-group inference (``infer_json_schema_by_group``) runs the same fold
-keyed by a group column via ``applyInPandas`` — one schema per group in
-a single shuffle, the groupwise face of the monoid.
+Incremental inference (keyed by file), ``infer_json_schema_by_group``
+and ``schema_drift`` (keyed by window) run ``infer.keyed_summaries``, the
+one fold, and ``infer.merge_summaries``, the one group merge.
 """
 
 from __future__ import annotations
 
 import json
-import os
 from dataclasses import dataclass, field
-from typing import Any, Iterator
+from typing import Any
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import fsutil
 from ..config import InferenceConfig
 from ..functions import summary as S
-from ..functions.rewrite import postprocess_schema
 from .infer import (
     SchemaInferenceError,
-    _apply_schema_uri,
+    keyed_summaries,
+    merge_summaries,
+    schema_from_summary,
 )
 
 STATE_NAME = "_schema_state.json"
@@ -50,24 +53,20 @@ class IncrementalResult:
 
 
 def _state_path(state_dir: str) -> str:
-    return os.path.join(state_dir, STATE_NAME)
+    return state_dir.rstrip("/") + "/" + STATE_NAME
 
 
-def load_state(state_dir: str) -> dict[str, Any]:
+def load_state(state_dir: str, spark=None) -> dict[str, Any]:
+    """Read the state sidecar. Pass ``spark`` for a URI state dir
+    (file://, s3a://, ...), which reads through the Hadoop FileSystem."""
+    text = fsutil.read_text(spark, _state_path(state_dir))
+    return json.loads(text) if text is not None else {"files": {}}
+
+
+def save_state(state_dir: str, state: dict[str, Any], spark=None) -> str:
+    """Write the state sidecar (atomically for a local path)."""
     p = _state_path(state_dir)
-    if os.path.exists(p):
-        with open(p) as f:
-            return json.load(f)
-    return {"files": {}}
-
-
-def save_state(state_dir: str, state: dict[str, Any]) -> str:
-    os.makedirs(state_dir, exist_ok=True)
-    p = _state_path(state_dir)
-    tmp = p + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(state, f)
-    os.replace(tmp, p)  # atomic: readers never see a torn state file
+    fsutil.write_text(spark, p, json.dumps(state))
     return p
 
 
@@ -84,10 +83,8 @@ def _canon_file(uri: str) -> str:
 
 def _list_parquet_files(spark: SparkSession, path: str) -> list[str]:
     """Distinct file names backing ``path``, from the file index
-    (``DataFrame.inputFiles``) — NO Spark job. The previous
-    implementation ran input_file_name() + distinct + collect, a full
-    corpus scan whose cost grew with TOTAL data size on every
-    incremental run — the exact rescan the module contract forbids."""
+    (``DataFrame.inputFiles``) — NO Spark job, so listing never rescans
+    the corpus."""
     return sorted(
         _canon_file(f) for f in spark.read.parquet(path).inputFiles()
     )
@@ -108,12 +105,11 @@ def infer_incremental(
     from the state — the schema always reflects exactly the current file
     set without any rescan of surviving files."""
     config = config or InferenceConfig()
-    state = load_state(state_dir)
-    # stored per-file summaries depend on the InferenceConfig
-    # (e.g. ignore_outer_array changes what _observe_cell folds),
-    # so state written under different rules — or under no recorded rules
-    # at all — must be discarded and every file re-folded, exactly like
-    # checkpoint.plan_resume invalidates skips on a config_fp change
+    state = load_state(state_dir, spark)
+    # stored summaries depend on the InferenceConfig (e.g.
+    # ignore_outer_array), so state written under other or unrecorded
+    # rules is discarded and every file re-folded, like
+    # checkpoint.plan_resume on a config_fp change
     from ..checkpoint import config_fingerprint
 
     cfg_fp = config_fingerprint(config)
@@ -126,30 +122,21 @@ def infer_incremental(
     reused = [f for f in current if f in known]
 
     if new_files:
-        # ONE batched job for ALL new files (per-file attribution via
-        # input_file_name, which matches inputFiles() byte-for-byte):
-        # the previous per-file loop launched 2+ serial Spark jobs per
-        # file — a config change over 10k files meant 10k sequential
-        # jobs instead of one. The collected per-file summaries are the
-        # same KB-sized objects the state file stores anyway.
-        df = (
-            spark.read.parquet(*new_files)
-            .withColumn("_file", F.input_file_name())
-            .select("_file", column)
+        # ONE job for ALL new files, keyed by input_file_name (which
+        # matches inputFiles() once canonicalised), not a job per file
+        partials = keyed_summaries(
+            spark.read.parquet(*new_files), column, F.input_file_name(), config
         )
-        partials = _grouped_partials(df, column, "_file", config)
         new_set = set(new_files)
-        for r in _merge_summaries(partials).collect():
+        for r in merge_summaries(partials, "key", "summary").collect():
             if r["error"]:
                 raise SchemaInferenceError(r["error"])
-            key = _canon_file(r["group"])
+            key = _canon_file(r["key"])
             if key not in new_set:
-                # a key outside the listed file set means the two
-                # attribution paths disagree in a way canonicalisation
-                # did not cover — failing loudly beats silently dropping
-                # the real summary and folding an empty one
+                # the two attribution paths disagree: fail loudly rather
+                # than drop the real summary and fold an empty one
                 raise SchemaInferenceError(
-                    f"per-file attribution key {r['group']!r} not in the "
+                    f"per-file attribution key {r['key']!r} not in the "
                     f"listed input files; encoding mismatch between "
                     f"input_file_name() and inputFiles()"
                 )
@@ -157,143 +144,27 @@ def infer_incremental(
                 "summary": json.loads(r["summary"]),
                 "processed": int(r["processed"]),
             }
-        # a new file with zero rows emits no partial row at all — it
-        # still needs (empty) state or the merge loop below KeyErrors
-        for f in new_files:
-            if f not in known:
-                known[f] = {"summary": S.new_summary(), "processed": 0}
 
-    # drop state for files no longer present
-    for f in list(known):
-        if f not in set(current):
-            del known[f]
-
-    merged = S.new_summary()
-    processed = 0
-    seen: set[str] = set()  # A6 dedup applies across files too
-    for f in current:  # stable file order ⇒ deterministic merge
-        entry = known[f]
-        processed += int(entry["processed"])
-        key = S.summary_key(entry["summary"])
-        if key in seen:
-            continue
-        seen.add(key)
-        S.merge(merged, json.loads(json.dumps(entry["summary"])))
+    # keep state for the current files only, in their stable order
+    # (=> deterministic merge); a new file with zero rows emitted no
+    # partial row and gets the empty summary
+    known = state["files"] = {
+        f: known.get(f) or {"summary": S.new_summary(), "processed": 0}
+        for f in current
+    }
+    merged = S.merge_distinct(e["summary"] for e in known.values())
+    processed = sum(int(e["processed"]) for e in known.values())
 
     if processed == 0:
         raise SchemaInferenceError("No JSON documents found to process")
 
-    schema = S.to_schema(merged)
-    postprocess_schema(schema, config)
-    schema = _apply_schema_uri(schema, config)
-    save_state(state_dir, state)
+    schema = schema_from_summary(merged, config)
+    save_state(state_dir, state, spark)
     return IncrementalResult(
         schema=schema,
         processed_count=processed,
         new_files=new_files,
         reused_files=reused,
-    )
-
-
-def _grouped_partials(
-    df: DataFrame, column: str, group_col: str, cfg: InferenceConfig
-) -> DataFrame:
-    """Partition-local summary fold keyed by ``group_col``: one
-    (group, summary, processed, error) row per group per partition.
-    The group field keeps the input column's dtype — hard-coding
-    ``group string`` (the old shape) crashed Arrow conversion for any
-    non-string group column (long shard ids, dates)."""
-    grp_t = df.schema[group_col].dataType.simpleString()
-
-    def partial_fold(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        from .infer import _observe_cell
-
-        nodes: dict[Any, dict] = {}
-        counts: dict[Any, int] = {}
-        errors: dict[Any, str | None] = {}
-        # first-occurrence (group, cell) cache — same contract as the
-        # ungrouped fold's cell cache in infer.partition_summaries:
-        # repeats can only bump object.count (never read by to_schema,
-        # stripped by summary_key), so they skip parse+observe and
-        # count via the cached flag; row order, per-group processed
-        # counts and strict-mode error indexes are exactly preserved.
-        # Byte-budgeted against adversarially-unique corpora.
-        cell_cache: dict[tuple, bool] = {}
-        cache_budget = 48 * 1024 * 1024
-        for pdf in batches:
-            for grp, cell in zip(pdf[group_col], pdf[column]):
-                if errors.get(grp) is not None:
-                    continue
-                key = (grp, cell)
-                hit = cell_cache.get(key)
-                if hit is not None:
-                    counts[grp] = counts.get(grp, 0) + hit
-                    continue
-                node = nodes.setdefault(grp, S.new_summary())
-                try:
-                    ok = _observe_cell(node, cell, cfg, counts.get(grp, 0))
-                    if ok:
-                        counts[grp] = counts.get(grp, 0) + 1
-                except SchemaInferenceError as e:
-                    errors[grp] = str(e)
-                    continue
-                if cache_budget > 0:
-                    cache_budget -= (
-                        len(cell) if isinstance(cell, str) else 0
-                    ) + 80
-                    cell_cache[key] = ok
-        if nodes:
-            yield pd.DataFrame(
-                {
-                    "group": list(nodes),
-                    "summary": [json.dumps(nodes[g]) for g in nodes],
-                    "processed": [counts.get(g, 0) for g in nodes],
-                    "error": [errors.get(g) for g in nodes],
-                }
-            )
-
-    return df.select(F.col(group_col), F.col(column)).mapInPandas(
-        partial_fold,
-        schema=f"group {grp_t}, summary string, processed long, "
-        "error string",
-    )
-
-
-def _merge_summaries(partials: DataFrame) -> DataFrame:
-    """Per-group merge of the KB-sized partial summaries — output stays
-    at the SUMMARY level (the monoid state), for callers that persist it
-    (incremental state) rather than finalising a schema."""
-    grp_t = partials.schema["group"].dataType.simpleString()
-
-    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        node = S.new_summary()
-        processed = 0
-        error = None
-        seen: set[str] = set()  # A6 dedup across partitions
-        for _, row in pdf.sort_values("summary").iterrows():
-            if error is None and row["error"]:
-                error = row["error"]
-            processed += int(row["processed"])
-            parsed = json.loads(row["summary"])
-            key = S.summary_key(parsed)
-            if key not in seen:
-                seen.add(key)
-                S.merge(node, parsed)
-        return pd.DataFrame(
-            {
-                "group": [pdf["group"].iloc[0]],
-                "summary": [json.dumps(node)],
-                "processed": [processed],
-                "error": [error],
-            }
-        )
-
-    return partials.groupBy("group").applyInPandas(
-        merge_group,
-        schema=f"group {grp_t}, summary string, processed long, "
-        "error string",
     )
 
 
@@ -303,45 +174,32 @@ def infer_json_schema_by_group(
     group_col: str,
     config: InferenceConfig | None = None,
 ) -> DataFrame:
-    """One merged JSON Schema per group: (group, schema_json, processed).
-
-    Two-level fold, NOT a whole-group ``applyInPandas`` (which would
-    materialise each group's rows in one pandas frame — unbounded at
-    scale): a partition-local fold emits one (group, summary) row per
-    group per partition, then the per-group merge runs over those
-    KB-sized summaries only. The shuffle carries summaries, never
-    documents — the groupwise face of ``infer_json_schema``. The group
-    column keeps its dtype (string, long, date, ...)."""
+    """One merged JSON Schema per group: (group, schema_json, processed,
+    error). The one fold emits a summary per group per partition and the
+    one group merge combines them, so the shuffle carries KB-sized
+    summaries, never documents. The group column keeps its dtype."""
     cfg = config or InferenceConfig()
-    partials = _grouped_partials(df, column, group_col, cfg)
-    merged = _merge_summaries(partials)
-    grp_t = merged.schema["group"].dataType.simpleString()
+    partials = keyed_summaries(df, column, F.col(group_col), cfg)
+    merged = merge_summaries(partials, "key", "summary")
+    key_t = merged.schema["key"].dataType.simpleString()
 
     def finalise(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        for _, row in pdf.iterrows():
-            if row["error"]:
-                out.append(None)
-                continue
-            schema = S.to_schema(json.loads(row["summary"]))
-            postprocess_schema(schema, cfg)
-            schema = _apply_schema_uri(schema, cfg)
-            out.append(json.dumps(schema, sort_keys=True))
-        return pd.DataFrame(
-            {
-                "group": pdf["group"],
-                "schema_json": out,
-                "processed": pdf["processed"],
-                "error": pdf["error"],
-            }
-        )
+        pdf["summary"] = [
+            None
+            if error
+            else json.dumps(
+                schema_from_summary(json.loads(s), cfg), sort_keys=True
+            )
+            for s, error in zip(pdf["summary"], pdf["error"])
+        ]
+        return pdf.rename(columns={"summary": "schema_json"})
 
     final = merged.mapInPandas(
         lambda batches: (finalise(p) for p in batches),
-        schema=f"group {grp_t}, schema_json string, processed long, "
+        schema=f"key {key_t}, schema_json string, processed long, "
         "error string",
     )
-    return final.withColumnRenamed("group", group_col)
+    return final.withColumnRenamed("key", group_col)
 
 
 def schema_drift(
@@ -351,9 +209,8 @@ def schema_drift(
     config: InferenceConfig | None = None,
 ) -> DataFrame:
     """Field-level schema drift between consecutive windows: one merged
-    schema per window (the two-level summary fold — the shuffle carries
-    KB summaries, never documents), then adjacent windows' property maps
-    diff driver-side (schemas are KB rollups; |windows| rows total).
+    schema per window (``infer_json_schema_by_group``), then adjacent
+    windows' property maps diff driver-side (|windows| KB-sized rows).
 
     Returns one row per window AFTER the first:
     (window, added, removed, changed) — field names that appeared,
@@ -364,11 +221,8 @@ def schema_drift(
     """
     per = infer_json_schema_by_group(df, column, window_col, config)
 
-    # windows must diff in their NATURAL order: lexicographic string sort
-    # put '10' before '9', so the 9→10 transition was reported backwards.
-    # Digit-only labels (hour/batch numbers) sort numerically; everything
-    # else (dates, names) keeps the string order; native numerics pass
-    # through the dtype-preserving by_group fold and sort numerically.
+    # windows diff in their NATURAL order ('9' before '10'): numerics and
+    # digit-only labels sort numerically, everything else as strings
     def _window_key(w):
         if isinstance(w, (int, float)):
             return (0, float(w), "")

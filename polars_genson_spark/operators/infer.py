@@ -6,10 +6,11 @@ Plan shape (scale-first):
 
 1. single-column scan — only the JSON column is read (Catalyst prunes; the
    parquet scan's ReadSchema carries exactly one field);
-2. ``mapInPandas`` folds every Arrow batch of a partition into ONE
-   per-partition summary dict (the monoid partial) — no per-row Python at
-   the Spark level, one Python call per batch, per-doc ``json.loads`` inside
-   the batch exactly like the reference parses per-doc inside a rayon chunk;
+2. ``keyed_summaries``, the one fold: ``mapInPandas`` folds a
+   partition's Arrow batches into one summary (monoid partial) per key,
+   parsing per doc like the reference does inside a rayon chunk. Here
+   the key is the partition id; operators/incremental.py keys the same
+   fold by group, window or file;
 3. the KB-sized summaries (one per partition) are collected and merged on
    the driver **in partition-id order**, which makes property insertion
    order deterministic — the Spark answer to the reference's OrderMap
@@ -19,9 +20,9 @@ Plan shape (scale-first):
    optional Avro (same sequencing as schema.rs:585-613).
 
 At 100 TB this never shuffles: the only data movement is one summary row
-per partition. With ~10^5 partitions the driver merge is still tiny; if it
-ever isn't, fold summaries pairwise with a treeAggregate-style reduction —
-the merge is associative by construction.
+per partition. Past ``TREE_MERGE_THRESHOLD`` partitions a tree level
+first merges contiguous partition-id ranges on the executors with
+``merge_summaries``, the one group merge the keyed paths also use.
 """
 
 from __future__ import annotations
@@ -31,7 +32,7 @@ from dataclasses import dataclass
 from typing import Any, Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..config import InferenceConfig
@@ -41,14 +42,9 @@ from ..functions.rewrite import postprocess_schema
 from ..functions.bridge import json_schema_to_spark_schema
 
 try:  # pragma: no cover - orjson is optional
-    import orjson as _fastjson
-
-    def _loads(s: str) -> Any:
-        return _fastjson.loads(s)
-
+    from orjson import loads as _loads
 except ImportError:  # pragma: no cover
-    def _loads(s: str) -> Any:
-        return json.loads(s)
+    from json import loads as _loads
 
 
 MAX_JSON_ERROR_LENGTH = 100
@@ -65,6 +61,15 @@ def _apply_schema_uri(schema: dict, config: InferenceConfig) -> dict:
     if config.schema_uri is not None:
         return {"$schema": config.schema_uri, **schema}
     return schema
+
+
+def schema_from_summary(node: dict, config: InferenceConfig) -> dict:
+    """Summary -> JSON Schema: ``to_schema``, the driver-side rewrites
+    (force-types, map inference, union reorder) and the ``$schema`` URI.
+    Avro conversion, where an entry point offers it, comes after."""
+    schema = S.to_schema(node)
+    postprocess_schema(schema, config)
+    return _apply_schema_uri(schema, config)
 
 
 class SchemaInferenceError(ValueError):
@@ -102,25 +107,16 @@ def _observe_cell(
         return False
 
     docs: list[Any] = []
-    if config.ndjson:
-        for line in text.splitlines():
-            line = line.strip()
-            if not line:
-                continue
-            try:
-                docs.append(_loads(line))
-            except ValueError as e:
-                raise SchemaInferenceError(
-                    f"Invalid JSON input at index {index + 1}: {e} "
-                    f"- JSON: {_truncate(line)}"
-                ) from None
-    else:
+    for line in text.splitlines() if config.ndjson else [text]:
+        line = line.strip()
+        if not line:
+            continue
         try:
-            docs.append(_loads(text))
+            docs.append(_loads(line))
         except ValueError as e:
             raise SchemaInferenceError(
                 f"Invalid JSON input at index {index + 1}: {e} "
-                f"- JSON: {_truncate(text)}"
+                f"- JSON: {_truncate(line)}"
             ) from None
 
     for doc in docs:
@@ -152,130 +148,128 @@ def _observe_cell(
     return True
 
 
-def partition_summaries(
-    df: DataFrame,
-    column: str,
-    config: InferenceConfig,
-    tree_merge_threshold: int = 256,
-    tree_group_size: int = 64,
-) -> list[dict]:
-    """Run the distributed partial-fold; return per-partition summary dicts
-    sorted by partition id (the deterministic merge order).
+# Above TREE_MERGE_THRESHOLD input partitions, partition_summaries merges
+# each run of TREE_GROUP_SIZE contiguous partition ids on the executors
+# before the driver collect (the treeAggregate depth-2 shape, SURVEY §3.1).
+TREE_MERGE_THRESHOLD = 256
+TREE_GROUP_SIZE = 64
 
-    With more than ``tree_merge_threshold`` partitions an intermediate
-    distributed merge level runs first (the treeAggregate depth-2 shape,
-    SURVEY §3.1): summaries are grouped by contiguous pid range
-    (``pid // tree_group_size``) and merged IN PID ORDER inside each group
-    via ``applyInPandas``, so the driver sees at most
-    ``n_partitions / tree_group_size`` summaries and determinism is
-    preserved (group key is monotonic in pid; within-group merge is
-    pid-sorted)."""
-    cfg = config
 
-    projected = (
-        df.select(F.col(column).alias("doc"))
-        .where(F.col("doc").isNotNull() & (F.trim(F.col("doc")) != F.lit("")))
-        .withColumn("pid", F.spark_partition_id())
-    )
+def keyed_summaries(
+    df: DataFrame, column: str, key: Column, config: InferenceConfig
+) -> DataFrame:
+    """The one partition-local fold of schema inference: one
+    ``(key, summary, processed, error)`` row per key per partition.
+
+    The key is ``spark_partition_id()`` for ungrouped inference, or the
+    group, window or file column (its dtype is kept). Rows keep their
+    order within a key, so ``processed`` and the strict-mode error index
+    (the key's count of processed cells before the bad one) match a
+    sequential fold. A key stops folding at its first invalid cell."""
+    projected = df.select(key.alias("key"), F.col(column).alias("doc"))
+    key_t = projected.schema["key"].dataType.simpleString()
 
     def fold(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        node = S.new_summary()
-        processed = 0
-        pid = -1
-        error: str | None = None
-        # First-occurrence cell cache (guide §1.2 step 2, per-task work):
-        # observing the SAME cell string twice cannot change the summary
-        # beyond ``object.count`` bookkeeping, which to_schema never
-        # reads and summary_key strips (verified: no other consumer) —
-        # so repeats skip the parse+observe entirely and only bump
-        # ``processed``. Row order, processed_count, and strict-mode
-        # error indexes are exactly preserved: rows are still walked in
-        # order, a failing cell was never cached (it raises at its first
-        # occurrence, as before), and each repeat counts via the cached
-        # processed-flag. Bounded so adversarially-unique corpora cannot
-        # blow worker memory; misses fall through to the normal path.
+        acc: dict[Any, list] = {}  # key -> [summary, processed, error]
+        # First-occurrence (key, cell) cache: a repeated cell can only
+        # bump ``object.count``, which to_schema never reads and
+        # summary_key strips, so repeats skip parse+observe and add the
+        # cached processed-flag. A failing cell is never cached. The
+        # byte budget bounds worker memory on all-unique corpora.
         # Measured: 1M one-row-group events props (100 distinct shapes)
-        # 2.38s -> 1.28s best-of-3 at 32 cores, identical schema +
-        # processed_count.
-        cell_cache: dict[str, bool] = {}
+        # 2.38s -> 1.28s best-of-3 at 32 cores, identical results.
+        cell_cache: dict[tuple, bool] = {}
         cache_budget = 48 * 1024 * 1024  # approx bytes of cached keys
         for pdf in batches:
-            if len(pdf) and pid < 0:
-                pid = int(pdf["pid"].iloc[0])
-            if error is not None:
-                continue
-            for i, cell in enumerate(pdf["doc"]):
-                hit = cell_cache.get(cell)
+            for k, cell in zip(pdf["key"].tolist(), pdf["doc"].tolist()):
+                a = acc.get(k)
+                if a is None:
+                    a = acc[k] = [S.new_summary(), 0, None]
+                elif a[2] is not None:
+                    continue
+                hit = cell_cache.get((k, cell))
                 if hit is not None:
-                    processed += hit
+                    a[1] += hit
                     continue
                 try:
-                    ok = _observe_cell(node, cell, cfg, processed)
-                    if ok:
-                        processed += 1
+                    ok = _observe_cell(a[0], cell, config, a[1])
                 except SchemaInferenceError as e:
-                    error = str(e)
-                    break
+                    a[2] = str(e)
+                    continue
+                a[1] += ok
                 if cache_budget > 0:
-                    cache_budget -= len(cell) + 64
-                    cell_cache[cell] = ok
-        if pid >= 0 or processed:
+                    cache_budget -= (len(cell) if cell else 0) + 80
+                    cell_cache[(k, cell)] = ok
+        if acc:
+            nodes, processed, errors = zip(*acc.values())
             yield pd.DataFrame(
                 {
-                    "pid": [pid],
-                    "summary": [json.dumps(node)],
-                    "processed": [processed],
-                    "error": [error],
+                    "key": list(acc),
+                    "summary": [json.dumps(n) for n in nodes],
+                    "processed": processed,
+                    "error": errors,
                 }
             )
 
-    summaries = projected.mapInPandas(
-        fold, schema="pid int, summary string, processed long, error string"
+    return projected.mapInPandas(
+        fold,
+        schema=f"key {key_t}, summary string, processed long, error string",
     )
 
-    if projected.rdd.getNumPartitions() > tree_merge_threshold:
 
-        def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-            pdf = pdf.sort_values("pid")  # deterministic within-group order
-            node = S.new_summary()
-            processed = 0
-            error: str | None = None
-            seen: set[str] = set()  # A6: merge each distinct summary once
-            for _, row in pdf.iterrows():
-                if error is None and row["error"]:
-                    error = row["error"]
-                parsed = json.loads(row["summary"])
-                key = S.summary_key(parsed)
-                if key not in seen:
-                    seen.add(key)
-                    S.merge(node, parsed)
-                processed += int(row["processed"])
-            return pd.DataFrame(
-                {
-                    "pid": [int(pdf["pid"].iloc[0])],
-                    "summary": [json.dumps(node)],
-                    "processed": [processed],
-                    "error": [error],
-                }
-            )
+def merge_summaries(
+    partials: DataFrame, by: Column | str, order: str
+) -> DataFrame:
+    """The one group merge of ``keyed_summaries`` rows: the rows sharing
+    ``by`` merge, sorted by ``order``, into one row that keeps the first
+    row's key, the sum of ``processed`` and the first error. Each
+    distinct summary merges once (``S.merge_distinct``). Only KB-sized
+    summaries cross the shuffle, never documents."""
 
-        summaries = (
-            summaries.withColumn(
-                "grp", (F.col("pid") / tree_group_size).cast("int")
-            )
-            .groupBy("grp")
-            .applyInPandas(
-                merge_group,
-                schema="pid int, summary string, processed long, error string",
-            )
+    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values(order)
+        errors = pdf["error"].dropna()
+        node = S.merge_distinct(json.loads(s) for s in pdf["summary"])
+        return pd.DataFrame(
+            {
+                "key": [pdf["key"].iloc[0]],
+                "summary": [json.dumps(node)],
+                "processed": [int(pdf["processed"].sum())],
+                "error": [errors.iloc[0] if len(errors) else None],
+            }
         )
 
-    rows = summaries.collect()
+    return partials.groupBy(by).applyInPandas(
+        merge_group, schema=partials.schema
+    )
 
+
+def partition_summaries(
+    df: DataFrame, column: str, config: InferenceConfig
+) -> list[dict]:
+    """Run the distributed partial fold; return per-partition summary
+    dicts (``pid``, ``summary``, ``processed``, ``error``) sorted by
+    partition id, the deterministic merge order.
+
+    With more than ``TREE_MERGE_THRESHOLD`` partitions the summaries of
+    each ``pid // TREE_GROUP_SIZE`` range first merge in pid order on the
+    executors, so the driver sees at most ``n / TREE_GROUP_SIZE`` of them
+    and determinism holds (the group key is monotonic in pid)."""
+    projected = df.where(
+        F.col(column).isNotNull() & (F.trim(F.col(column)) != F.lit(""))
+    )
+    summaries = keyed_summaries(
+        projected, column, F.spark_partition_id(), config
+    )
+    if projected.rdd.getNumPartitions() > TREE_MERGE_THRESHOLD:
+        summaries = merge_summaries(
+            summaries, (F.col("key") / TREE_GROUP_SIZE).cast("int"), "key"
+        )
     out = sorted(
-        (r.asDict() for r in rows), key=lambda r: r["pid"]
+        (r.asDict() for r in summaries.collect()), key=lambda r: r["key"]
     )
     for r in out:
+        r["pid"] = r.pop("key")
         r["summary"] = json.loads(r["summary"])
     return out
 
@@ -300,28 +294,10 @@ def infer_json_schema(
     if processed == 0:
         raise SchemaInferenceError("No JSON documents found to process")
 
-    node = S.new_summary()
-    # A6 duplicate-summary dedup (reference schema.rs:429-432 hashes each
-    # schema with xxh64 and adds it once): on a homogeneous corpus most
-    # per-partition summaries are structurally identical, and S.merge is
-    # idempotent on identical structures, so each distinct summary merges
-    # exactly once — in first-seen pid order, preserving determinism. We
-    # key on the canonical count-stripped JSON string instead of a 64-bit
-    # hash: same dedup, zero collision risk, KB-sized strings driver-side.
-    seen: set[str] = set()
-    for p in parts:  # partition-id order ⇒ deterministic insertion order
-        key = S.summary_key(p["summary"])
-        if key in seen:
-            continue
-        seen.add(key)
-        S.merge(node, p["summary"])
+    # partition-id order => deterministic property insertion order
+    node = S.merge_distinct(p["summary"] for p in parts)
 
-    schema = S.to_schema(node)
-    if not isinstance(schema, dict):  # defensive; to_schema returns dict
-        schema = {}
-    postprocess_schema(schema, config)
-    schema = _apply_schema_uri(schema, config)
-
+    schema = schema_from_summary(node, config)
     if config.avro:
         schema = json_schema_to_avro(schema)
 
@@ -355,11 +331,7 @@ def infer_json_schema_per_row(
             node = S.new_summary()
             if cell is None or not _observe_cell(node, cell, cfg, 0):
                 return None
-            schema = S.to_schema(node)
-            if not isinstance(schema, dict):
-                schema = {}
-            postprocess_schema(schema, cfg)
-            schema = _apply_schema_uri(schema, cfg)
+            schema = schema_from_summary(node, cfg)
             if cfg.avro:
                 schema = json_schema_to_avro(schema)
             return json.dumps(schema, separators=(",", ":"), sort_keys=True)

@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 
 from ..config import ValidationConfig
 from .checks import consistency_reason_expr, drift_from_histogram
-from .stats import token_id_histogram, token_length_histogram
+from .stats import token_id_histogram
 
 
 def _nullsafe_broadcast_left(left: DataFrame, right: DataFrame, key: str) -> DataFrame:
@@ -330,9 +330,3 @@ def finalise_summary(report: ValidationReport) -> dict[str, Any]:
         "per_partition": {r["source"]: r for r in rows},
     }
     return report.summary
-
-
-def token_histograms(df: DataFrame, cfg: ValidationConfig | None = None):
-    """Convenience: both histogram rollups (length + token-id)."""
-    cfg = cfg or ValidationConfig()
-    return token_length_histogram(df, cfg), token_id_histogram(df, cfg)

@@ -130,12 +130,13 @@ def test_avro_output_f1(spark):
     assert by_name["email"] == ["null", "string"]
 
 
-def test_tree_merge_matches_flat(spark):
+def test_tree_merge_matches_flat(spark, monkeypatch):
     """Depth-2 tree merge (SURVEY §3.1) must produce the identical schema
     to the flat per-partition collect, independent of grouping."""
     import json as _json
 
     from polars_genson_spark.functions import summary as S
+    from polars_genson_spark.operators import infer as infer_mod
     from polars_genson_spark.operators.infer import partition_summaries
 
     docs = [
@@ -151,10 +152,10 @@ def test_tree_merge_matches_flat(spark):
             S.merge(node, p["summary"])
         return S.to_schema(node), sum(p["processed"] for p in parts)
 
-    flat = partition_summaries(df, "json_data", cfg, tree_merge_threshold=10_000)
-    tree = partition_summaries(
-        df, "json_data", cfg, tree_merge_threshold=2, tree_group_size=3
-    )
+    flat = partition_summaries(df, "json_data", cfg)  # 8 <= threshold
+    monkeypatch.setattr(infer_mod, "TREE_MERGE_THRESHOLD", 2)
+    monkeypatch.setattr(infer_mod, "TREE_GROUP_SIZE", 3)
+    tree = partition_summaries(df, "json_data", cfg)
     assert len(tree) < len(flat)  # the tree level actually merged something
     fs, fn = final(flat)
     ts, tn = final(tree)
@@ -211,7 +212,6 @@ def test_summary_dedup_same_schema(spark):
     merge once. On a homogeneous corpus the output schema must be
     identical to the no-dedup fold, and the dedup must actually trigger."""
     import json as _json
-    import time
 
     from polars_genson_spark.functions import summary as S
     from polars_genson_spark.operators.infer import partition_summaries
@@ -235,14 +235,8 @@ def test_summary_dedup_same_schema(spark):
     node_all = S.new_summary()
     for p in parts:
         S.merge(node_all, _json.loads(_json.dumps(p["summary"])))
-    # dedup fold (what infer_json_schema now does)
-    node_dedup = S.new_summary()
-    seen = set()
-    for p in parts:
-        k = S.summary_key(p["summary"])
-        if k not in seen:
-            seen.add(k)
-            S.merge(node_dedup, _json.loads(_json.dumps(p["summary"])))
+    # dedup fold (what infer_json_schema does)
+    node_dedup = S.merge_distinct(p["summary"] for p in parts)
     assert S.to_schema(node_all) == S.to_schema(node_dedup)
 
     # end-to-end: the public API returns the same schema and full count
