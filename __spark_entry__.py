@@ -151,25 +151,31 @@ def q_referential_customer_nation(spark, sf_dir):
 def q_drift_nchars_chi2(spark, sf_dir):
     """Per-source chi² of the n_chars bucket distribution vs the rest —
     the SQL-expressible face of the drift check."""
+    from pyspark.sql import Window
+
     d = _t(spark, sf_dir, "documents")
     b = d.select(
         "source", (F.col("n_chars") / 100).cast("long").alias("bucket")
     )
-    # persist the KB-sized rollup: the three marginal aggregations below
-    # each reuse it, so `documents` is scanned ONCE (not per branch)
-    counts = (
-        b.groupBy("source", "bucket")
-        .agg(F.count(F.lit(1)).alias("o"))
-        .persist()
-    )
-    tot_source = counts.groupBy("source").agg(F.sum("o").alias("n_s"))
-    tot_bucket = counts.groupBy("bucket").agg(F.sum("o").alias("n_b"))
-    grand = counts.agg(F.sum("o").alias("n")).select("n")
+    counts = b.groupBy("source", "bucket").agg(F.count(F.lit(1)).alias("o"))
+    # the marginals are windows over the KB-sized rollup, so `documents`
+    # is scanned once: joins with aggregates of the rollup re-scan it per
+    # branch, because each branch's inferred null filters defeat exchange
+    # reuse. The global window moves the rollup to one partition, fine at
+    # its size. The filter keeps only the rows the oracle's inner joins
+    # keep.
     joined = (
-        counts.join(tot_source, "source")
-        .join(tot_bucket, "bucket")
-        .crossJoin(F.broadcast(grand))
-        .withColumn("e", F.col("n_s") * F.col("n_b") / F.col("n"))
+        counts.select(
+            "source",
+            "bucket",
+            "o",
+            (
+                F.sum("o").over(Window.partitionBy("source"))
+                * F.sum("o").over(Window.partitionBy("bucket"))
+                / F.sum("o").over(Window.partitionBy())
+            ).alias("e"),
+        )
+        .where(F.col("source").isNotNull() & F.col("bucket").isNotNull())
         .withColumn(
             "contrib", (F.col("o") - F.col("e")) ** 2 / F.col("e")
         )
@@ -479,13 +485,13 @@ def q_drift_ks_nchars(spark, sf_dir):
     from pyspark.sql import Window
 
     d = _t(spark, sf_dir, "documents")
-    # persisted rollup: grid/cum/marginals all reuse it — one scan of the
-    # base table regardless of how many window branches consume it
+    # the rollup feeds grid/cum/marginals without a persist, which would
+    # outlive the query. Exchange reuse shares its shuffle between two
+    # branches; the others re-scan `documents`
     counts = (
         d.select("source", (F.col("n_chars") / 100).cast("long").alias("bucket"))
         .groupBy("source", "bucket")
         .agg(F.count(F.lit(1)).alias("o"))
-        .persist()
     )
     grid = (
         counts.select("source").distinct()
@@ -932,19 +938,8 @@ def q_corpus_verdicts(spark, sf_dir):
     allowed = (
         _t(spark, sf_dir, "documents").select("source").distinct()
     )
-    # hist_impl="jvm" (r06, revised): with validate_corpus now
-    # persisting its input for the multi-pass suite, the drift kernel
-    # reads cached token arrays and the JVM explode+agg wins (0.40s vs
-    # 0.54s arrow at sf1.0/32 cores; end-to-end A/B of this query:
-    # arrow/no-persist 2.50s, arrow/persist 2.12s, jvm/persist 2.04s).
-    # The earlier arrow pick only paid off when each pass re-tokenised
-    # from parquet. Both kernels are bit-identical (pinned by pytest);
-    # drift values don't enter this query's hash but the full suite
-    # stays ON.
     report = validate_corpus(
-        corpus,
-        allowed,
-        ValidationConfig(token_hist_bucket=16, hist_impl="jvm"),
+        corpus, allowed, ValidationConfig(token_hist_bucket=16)
     )
     return report.verdicts.select(
         "source",

@@ -98,12 +98,11 @@ def save_manifest(run_dir: str, manifest: dict[str, Any], spark=None) -> str:
 
 # Fields with NO effect on verdicts or recorded metrics — pure execution
 # knobs. Hashing them would invalidate every resume skip on a tuning rerun
-# (e.g. a different salting factor or the arrow histogram kernel),
-# revalidating the whole corpus even though no check rule changed.
+# (e.g. a different salting factor), revalidating the whole corpus even
+# though no check rule changed.
 _PERF_ONLY_FIELDS = frozenset(
     {
         "salt_buckets",
-        "hist_impl",
         "max_violation_examples",  # bounds the example WRITE, not counts
     }
 )

@@ -94,11 +94,6 @@ class ValidationConfig:
     # Thresholds
     token_hist_bucket: int = 64  # n_tok histogram bucket width
     token_id_buckets: int = 256  # token-value histogram buckets for drift
-    # Drift-histogram kernel: "jvm" = explode + two-phase hash agg (whole
-    # pipeline stays in codegen; best scaling, best at high parallelism);
-    # "arrow" = mapInArrow + np.bincount (fastest per-core at low
-    # parallelism; pays the Arrow transfer of the tokens column).
-    hist_impl: str = "jvm"
     vocab_size: int = 50257
     # token-id-range scan (any id outside [0, vocab_size)): an F.exists
     # over every token of every doc — the most expensive consistency

@@ -1,4 +1,4 @@
-"""spark-submit entry points and the N-vs-4N scaling benchmark.
+"""spark-submit entry points.
 
 Usage (cluster):
     spark-submit --py-files polars_genson_spark.zip -m polars_genson_spark.jobs \
@@ -27,23 +27,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import checkpoint as ckpt
+from . import fsutil
 from .config import ValidationConfig
 from .operators.verdicts import finalise_summary, validate_corpus
+from .pipeline import CurateConfig
 from .session import get_spark
-from .sources.corpus import allowed_sources_df, generate_corpus
-
-
-from . import fsutil
-
-
-def _write_text_sidecar(spark: SparkSession, uri: str, text: str) -> None:
-    fsutil.write_text(spark, uri, text)
-
-
-def _read_text_sidecar(spark: SparkSession, uri: str) -> str | None:
-    """Contents of ``uri`` or None if absent — the remote-safe analogue
-    of the os.path.exists + open() pattern (fsutil)."""
-    return fsutil.read_text(spark, uri)
+from .sources.corpus import allowed_sources_df
 
 
 def repartition_salted(
@@ -277,213 +266,6 @@ def make_pyfiles_zip(output_path: str) -> str:
 
 
 # ---------------------------------------------------------------------------
-# Scaling benchmark (N vs 4N cores — sandbox stand-in for N vs 4N executors)
-# ---------------------------------------------------------------------------
-
-
-def bench_one(
-    n_rows: int, cores: int, seed: int = 42, reps: int = 3,
-    job: str = "validate", input_path: str | None = None,
-) -> dict[str, Any]:
-    """Measure rows/sec of a full job at local[cores]. One warmup run
-    (JIT, Python workers, broadcasts) then ``reps`` timed runs; best time
-    wins (standard de-noising on shared hardware). Caches from a run are
-    dropped before the next so every rep recomputes the full pipeline.
-
-    ``job="validate"``: the validation engine (stats/HLL/referential/
-    drift) — the north-rule headline. ``job="near_dup"``: the curate
-    pipeline's heaviest stage (MinHash candidates → exact-Jaccard verify
-    → connected components) over texts derived from the synthetic corpus
-    (its planted duplicate rate provides real near-dup work)."""
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()
-    spark = get_spark(
-        app_name=f"pgs-scaling-{cores}",
-        master=f"local[{cores}]",
-        shuffle_partitions=max(cores, 8),
-    )
-    cfg = ValidationConfig()
-    if input_path is not None:
-        # measure on a REAL pre-tokenized table (e.g. the 10M-row
-        # scale-run output) instead of the synthetic corpus; identical
-        # input at both parallelism levels, parquet's own partitioning
-        corpus = spark.read.parquet(input_path).persist()
-        n_rows = corpus.count()  # materialise outside the timed window
-    else:
-        corpus = generate_corpus(
-            spark, n_rows, seed=seed, partitions=max(cores * 2, 8)
-        ).persist()
-        corpus.count()  # materialise outside the timed window
-    allowed = allowed_sources_df(spark)
-    if job == "near_dup":
-        from .operators.dedup import (
-            minhash_candidates,
-            near_dup_clusters,
-            ngram_jaccard_pairs,
-        )
-
-        docs = corpus.select(
-            F.monotonically_increasing_id().alias("doc_id"),
-            F.array_join(F.col("tokens"), " ").alias("text"),
-        ).persist()
-        docs.count()
-
-        def run_once():
-            cand = minhash_candidates(
-                docs, num_perm=32, bands=16, min_jaccard=0.8
-            ).select("id_a", "id_b")
-            ids = (
-                cand.select(F.col("id_a").alias("doc_id"))
-                .unionByName(cand.select(F.col("id_b").alias("doc_id")))
-                .distinct()
-                .join(docs, "doc_id")
-            )
-            pairs = ngram_jaccard_pairs(
-                ids, n=3, min_jaccard=0.8, df_max=1000
-            )
-            near_dup_clusters(pairs).count()
-
-        def cleanup():
-            # the dedup operators persist internal frames (signatures,
-            # band entries, inverted index) with no handle exposed —
-            # without this, ~3 cached frames accumulate per rep and
-            # evict/spill the shared input, skewing exactly the timings
-            # the best-of-reps methodology protects. Runs OUTSIDE the
-            # timed window; the shared docs frame is re-materialised.
-            spark.catalog.clearCache()
-            docs.persist()
-            docs.count()
-    elif job == "validate":
-        def run_once():
-            report = validate_corpus(corpus, allowed, cfg)
-            finalise_summary(report)
-            report.violations.count()
-            report.release()
-
-        cleanup = None
-    else:
-        raise ValueError(f"unknown job {job!r} (validate|near_dup)")
-    times: list[float] = []
-    for rep in range(reps + 1):  # rep 0 = warmup
-        if rep > 0 and cleanup is not None:
-            cleanup()  # drop the previous run's caches, un-timed
-        t0 = time.perf_counter()
-        run_once()
-        dt = time.perf_counter() - t0
-        if rep > 0:
-            times.append(dt)
-    best = min(times)
-    corpus.unpersist()
-    spark.stop()
-    return {
-        "cores": cores,
-        "job": job,
-        "n_rows": n_rows,
-        "rows_per_sec": round(n_rows / best, 1),
-        "seconds": round(best, 3),
-        "all_seconds": [round(t, 3) for t in times],
-    }
-
-
-def _bench_one_pinned(
-    n_rows: int, cores: int, seed: int, reps: int, job: str = "validate",
-    input_path: str | None = None,
-) -> dict[str, Any]:
-    """Run bench_one in a subprocess bound to exactly ``cores`` CPUs."""
-    import subprocess
-
-    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    env = dict(os.environ)
-    env["PYTHONPATH"] = repo_root + os.pathsep + env.get("PYTHONPATH", "")
-    cmd = [
-        "taskset", "-c", f"0-{cores - 1}",
-        sys.executable, "-m", "polars_genson_spark.jobs", "bench-one",
-        "--rows", str(n_rows),
-        "--cores", str(cores),
-        "--seed", str(seed),
-        "--reps", str(reps),
-        "--job", job,
-    ]
-    if input_path is not None:
-        cmd += ["--input", input_path]
-    proc = subprocess.run(
-        cmd, capture_output=True, text=True, env=env, check=True
-    )
-    return json.loads(proc.stdout.strip().splitlines()[-1])
-
-
-def scaling_bench(
-    n_rows: int = 4_000_000,
-    n_small: int = 8,
-    n_large: int = 32,
-    seed: int = 42,
-    pin: bool = True,
-    rounds: int = 3,
-    job: str = "validate",
-    input_path: str | None = None,
-) -> dict[str, Any]:
-    """Run the identical validation job at local[n_small] and
-    local[n_large]; report both throughputs and the scaling efficiency
-    (throughput_large / throughput_small) / (n_large / n_small).
-
-    Methodology (shared noisy hardware):
-    - Each measurement runs in a subprocess bound to exactly N cores via
-      ``taskset`` (``pin=True``), so the small run cannot borrow spare
-      machine cores for GC/JIT/Python workers — the honest emulation of an
-      N-core executor slice. Falls back to in-process when taskset is
-      missing.
-    - Host throughput drifts minute-to-minute (noisy neighbours), so the
-      two sizes are measured in interleaved (small, large) pairs per
-      round; the reported efficiency is the MEDIAN of per-round
-      efficiencies, which cancels window-to-window drift that sequential
-      best-of runs cannot.
-    """
-    import shutil
-    import statistics
-
-    use_pin = pin and shutil.which("taskset") is not None
-    ratio = n_large / n_small
-    per_round: list[dict[str, Any]] = []
-    for _ in range(rounds):
-        pair = {}
-        for n in (n_small, n_large):
-            if use_pin:
-                pair[n] = _bench_one_pinned(
-                    n_rows, n, seed, reps=1, job=job, input_path=input_path
-                )
-            else:
-                pair[n] = bench_one(
-                    n_rows, n, seed, reps=1, job=job, input_path=input_path
-                )
-        eff = (
-            pair[n_large]["rows_per_sec"] / pair[n_small]["rows_per_sec"]
-        ) / ratio
-        per_round.append(
-            {
-                "small": pair[n_small],
-                "large": pair[n_large],
-                "efficiency": round(eff, 3),
-            }
-        )
-    med_eff = statistics.median(r["efficiency"] for r in per_round)
-    best_small = max(r["small"]["rows_per_sec"] for r in per_round)
-    best_large = max(r["large"]["rows_per_sec"] for r in per_round)
-    if input_path is not None:
-        n_rows = per_round[0]["small"].get("n_rows", n_rows)
-    return {
-        "n_rows": n_rows,
-        "input": input_path,
-        "pinned": use_pin,
-        "rounds": per_round,
-        "small": {"cores": n_small, "best_rows_per_sec": best_small},
-        "large": {"cores": n_large, "best_rows_per_sec": best_large},
-        "speedup_median": round(med_eff * ratio, 3),
-        "scaling_efficiency": round(med_eff, 3),
-    }
-
-
-# ---------------------------------------------------------------------------
 # CLI
 # ---------------------------------------------------------------------------
 
@@ -547,18 +329,6 @@ def main(argv: list[str] | None = None) -> int:
                     help="also write benchmark-side vectors hitting the "
                     "first semantic groups")
 
-    s = sub.add_parser("scaling-bench", help="N vs 4N scaling evidence")
-    s.add_argument("--rows", type=int, default=2_000_000)
-    s.add_argument("--small", type=int, default=8)
-    s.add_argument("--large", type=int, default=32)
-    s.add_argument("--no-pin", action="store_true")
-    s.add_argument("--job", default="validate",
-                   choices=["validate", "near_dup"],
-                   help="which pipeline to scale-measure")
-    s.add_argument("--input", default=None,
-                   help="measure on this pre-tokenized parquet table "
-                        "instead of the synthetic corpus (--rows ignored)")
-
     z = sub.add_parser("package", help="build the --py-files zip")
     z.add_argument("--output", default="polars_genson_spark.zip")
 
@@ -581,10 +351,6 @@ def main(argv: list[str] | None = None) -> int:
                         "token id")
     c.add_argument("--min-jaccard", type=float, default=0.8)
     c.add_argument("--no-near-dup", action="store_true")
-    c.add_argument("--no-counts", action="store_true",
-                   help="production fast path: skip per-stage row counts "
-                        "(one count job per stage); summary reports only "
-                        "the final written row count")
     c.add_argument("--embeddings", default=None,
                    help="embeddings parquet enabling the SemDeDup stage")
     c.add_argument("--benchmark-embeddings", default=None,
@@ -593,9 +359,11 @@ def main(argv: list[str] | None = None) -> int:
     c.add_argument("--decontamination-threshold", type=float, default=None,
                    help="semantic decontamination cosine threshold "
                         "(default: --semantic-threshold)")
-    c.add_argument("--minhash-bucket-max", type=int, default=None,
+    c.add_argument("--minhash-bucket-max", type=int,
+                   default=CurateConfig.minhash_bucket_max,
                    help="drop LSH band buckets larger than this before "
-                        "candidate generation (skew guard)")
+                        "candidate generation (skew guard; default "
+                        "%(default)s)")
     c.add_argument("--cluster-method", default="label",
                    choices=["label", "star"],
                    help="near-dup connected components: min-label "
@@ -652,17 +420,6 @@ def main(argv: list[str] | None = None) -> int:
     tk.add_argument("--n-merges", type=int, default=500)
     tk.add_argument("--max-words", type=int, default=50_000)
 
-    b = sub.add_parser("bench-one", help="one pinned throughput measurement")
-    b.add_argument("--rows", type=int, required=True)
-    b.add_argument("--cores", type=int, required=True)
-    b.add_argument("--seed", type=int, default=42)
-    b.add_argument("--reps", type=int, default=3)
-    b.add_argument("--job", default="validate",
-                   choices=["validate", "near_dup"])
-    b.add_argument("--input", default=None,
-                   help="parquet table to validate instead of the "
-                        "synthetic corpus")
-
     # global knob: reduce-side parallelism must be sized to the DATA, not
     # the core count — a 10M-row rollup at 32 shuffle partitions puts
     # multi-million-key hash aggs in every concurrent task; 256+ keeps
@@ -675,21 +432,6 @@ def main(argv: list[str] | None = None) -> int:
 
     args = p.parse_args(argv)
 
-    if args.cmd == "scaling-bench":
-        out = scaling_bench(
-            args.rows, args.small, args.large, pin=not args.no_pin,
-            job=args.job, input_path=args.input,
-        )
-        print(json.dumps(out))
-        return 0
-    if args.cmd == "bench-one":
-        print(
-            json.dumps(bench_one(
-                args.rows, args.cores, args.seed, args.reps, job=args.job,
-                input_path=args.input,
-            ))
-        )
-        return 0
     if args.cmd == "package":
         print(make_pyfiles_zip(args.output))
         return 0
@@ -744,7 +486,7 @@ def main(argv: list[str] | None = None) -> int:
             }))
             return 0
         if args.cmd == "curate":
-            from .pipeline import CurateConfig, curate
+            from .pipeline import curate
 
             docs = spark.read.parquet(args.input)
             benchmark = (
@@ -812,19 +554,14 @@ def main(argv: list[str] | None = None) -> int:
                 docs, benchmark, cfg,
                 embeddings=embeddings,
                 benchmark_embeddings=bench_emb,
-                counts=not args.no_counts,
             )
             result.chunks.write.mode("overwrite").parquet(args.output)
+            # the final stage boundary fed the write above; it is now
+            # garbage, and so is the checkpoint tree
+            result.release()
             if args.checkpoint_dir:
-                # the final stage boundary fed the write above; the
-                # checkpoint tree is now garbage
                 fsutil.delete_dir(spark, args.checkpoint_dir)
-            summary = result.summary()
-            if args.no_counts:
-                summary["written"] = spark.read.parquet(args.output).count()
-            if result.stage_seconds:
-                summary["stage_seconds"] = result.stage_seconds
-            print(json.dumps(summary))
+            print(json.dumps(result.summary()))
             return 0
         if args.cmd == "tokenize":
             from .operators.tokenizer import (
@@ -859,7 +596,7 @@ def main(argv: list[str] | None = None) -> int:
             # through the Hadoop FileSystem API so remote output URIs
             # (s3://, hdfs://) work — a local open() would crash AFTER
             # the expensive parquet write completed
-            _write_text_sidecar(
+            fsutil.write_text(
                 spark,
                 args.output.rstrip("/") + "/_tokenizer.json",
                 json.dumps({"merges": merges, "vocab_size": len(vocab)}),
@@ -901,8 +638,6 @@ def main(argv: list[str] | None = None) -> int:
             }))
             return 0
         if args.cmd == "stream-validate":
-            from .config import ValidationConfig
-            from .operators.verdicts import validate_corpus
             from .streaming.validate_stream import run_streaming_validation
 
             batches: list[dict] = []
@@ -970,15 +705,13 @@ def main(argv: list[str] | None = None) -> int:
                 allowed = corpus.select("source").distinct()
             else:
                 allowed = allowed_sources_df(spark)
-            from .config import ValidationConfig as _VC
-
             vocab_size = args.vocab_size
             if vocab_size is None:
                 # the tokenize job records the EXACT id bound with the
                 # table it wrote — prefer it over the generic default so
                 # the token-range check is tight by default
                 sidecar = args.input.rstrip("/") + "/_tokenizer.json"
-                sidecar_text = _read_text_sidecar(spark, sidecar)
+                sidecar_text = fsutil.read_text(spark, sidecar)
                 if sidecar_text is not None:
                     vocab_size = int(json.loads(sidecar_text)["vocab_size"])
                 else:
@@ -999,7 +732,7 @@ def main(argv: list[str] | None = None) -> int:
                 corpus,
                 allowed,
                 args.output,
-                cfg=_VC(
+                cfg=ValidationConfig(
                     max_seq_len=args.max_seq_len,
                     min_seq_len=args.min_seq_len,
                     vocab_size=vocab_size,
@@ -1007,8 +740,8 @@ def main(argv: list[str] | None = None) -> int:
                 resume=not args.no_resume,
             )
             # in-job wall (post-session, scan->verdicts->writes): the
-            # scaling-criterion runs divide rows by THIS when comparing
-            # N vs 4N — JVM/session startup is a per-run constant that
+            # N-vs-4N criterion runner (tools_scale_gated.py) divides
+            # rows by THIS — JVM/session startup is a per-run constant that
             # amortizes to nil at the north rule's 10^12-sequence scale,
             # so including it would understate large-N efficiency on
             # short calibration corpora

@@ -61,21 +61,20 @@ def token_length_histogram(
 def token_id_histogram(
     df: DataFrame,
     cfg: ValidationConfig | None = None,
-    use_arrow: bool | None = None,
+    use_arrow: bool = False,
 ) -> DataFrame:
     """Histogram of token *values* per source for drift tests:
     (source, bucket, cnt) with bucket = token_id // (vocab/buckets).
 
-    Two kernels, selected by ``cfg.hist_impl`` (or the ``use_arrow``
-    override); both shuffle ≤ |sources| × buckets × partitions rows —
+    Two kernels; both shuffle ≤ |sources| × buckets × partitions rows —
     independent of corpus size, the plan that survives 100 TB:
 
-    - ``"jvm"`` (default): Catalyst explode + two-phase hash aggregate —
-      partial agg runs before the exchange, the whole pipeline stays in
-      whole-stage codegen. Best parallel scaling (no Python transfer) and
-      fastest at high parallelism.
-    - ``"arrow"``: one ``mapInArrow`` pass — token arrays are flattened
-      zero-copy per batch (``ListArray.flatten``) and reduced with
+    - default: Catalyst explode + two-phase hash aggregate — partial agg
+      runs before the exchange, the whole pipeline stays in whole-stage
+      codegen. Best parallel scaling (no Python transfer) and fastest at
+      high parallelism. ``validate_corpus`` uses this one.
+    - ``use_arrow=True``: one ``mapInArrow`` pass — token arrays are
+      flattened zero-copy per batch (``ListArray.flatten``) and reduced with
       ``np.bincount`` keyed by dictionary-encoded source (no per-row
       Python). ~3× faster per core at low parallelism, but pays the Arrow
       transfer of the tokens column to Python workers.
@@ -83,9 +82,6 @@ def token_id_histogram(
     cfg = cfg or ValidationConfig()
     width = max(1, cfg.vocab_size // cfg.token_id_buckets)
     src_col, tok_col = cfg.source_col, cfg.tokens_col
-    if use_arrow is None:
-        use_arrow = cfg.hist_impl == "arrow"
-
     if not use_arrow:
         tok = F.explode(F.col(tok_col)).alias("tok")
         exploded = df.select(F.col(src_col), tok)

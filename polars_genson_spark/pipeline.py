@@ -10,9 +10,9 @@ pipeline operators into the shape a real pre-training data job runs.
 
 Every stage is a DataFrame→DataFrame transform (lazy until the final
 write), so Catalyst fuses the cheap stages and the expensive ones
-(candidate joins) keep their audited plan shapes. Stage row counts are
-collected once at the end from a persisted frame per stage boundary —
-the counts are the curation report, not a side effect of extra scans.
+(candidate joins) keep their audited plan shapes. Each stage boundary is
+materialised once and counted from its checkpoint — the counts are the
+curation report, not a side effect of extra scans.
 """
 
 from __future__ import annotations
@@ -121,13 +121,31 @@ class CurateResult:
     chunks: DataFrame
     stage_counts: dict[str, int] = field(default_factory=dict)
     # wall seconds from the previous stage boundary to the end of this
-    # stage's eager materialization (counts mode only): each boundary is
-    # a localCheckpoint + count, so the delta IS the stage's cost,
-    # including any driver-side probes its operator runs
+    # stage's eager materialization: each boundary is a checkpoint +
+    # count, so the delta IS the stage's cost, including any driver-side
+    # probes its operator runs
     stage_seconds: dict[str, float] = field(default_factory=dict)
+    # the final localCheckpoint boundary (None with checkpoint_dir); kept
+    # apart from ``chunks`` because the epoch shuffle wraps it
+    boundary: DataFrame | None = field(default=None, repr=False)
 
     def summary(self) -> dict[str, Any]:
-        return dict(self.stage_counts)
+        return {**self.stage_counts, "stage_seconds": self.stage_seconds}
+
+    def release(self) -> None:
+        """Free the final stage boundary's blocks once ``chunks`` has been
+        consumed (the earlier boundaries are freed as curate runs)."""
+        if self.boundary is not None:
+            _release_checkpoint(self.boundary)
+            self.boundary = None
+
+
+def _release_checkpoint(df: DataFrame) -> None:
+    # a localCheckpoint frame has no cache-manager entry, so unpersist()
+    # is a no-op; unpersist the checkpointed RDD under its LogicalRDD
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.getClass().getSimpleName() == "LogicalRDD":
+        plan.rdd().unpersist(True)
 
 
 def _tokens_expr(text_col: str, vocab: int):
@@ -160,23 +178,20 @@ def curate(
     cfg: CurateConfig | None = None,
     embeddings: DataFrame | None = None,
     benchmark_embeddings: DataFrame | None = None,
-    counts: bool = True,
 ) -> CurateResult:
     """Run the curation pipeline; returns the chunk table plus per-stage
-    surviving-row counts.
+    surviving-row counts and seconds.
 
     ``benchmark_embeddings`` (with ``embeddings``) enables the semantic
     decontamination stage: docs whose embedding is τ-close to any
     benchmark embedding are dropped — the paraphrase-level complement of
     the n-gram ``benchmark`` stage.
 
-    ``counts=False`` skips the per-stage row counts (``stage_counts``
-    comes back empty), saving one count job per stage. Stages are still
-    localCheckpointed (lazily) so the plan tree stays truncated and no
-    stage lineage executes twice. Measured at 1M docs on local[32] the
-    saving is NIL (BENCH.md "curate --no-counts A/B"): the counts scan
-    already-cached checkpoint blocks, so the default stays True; the
-    flag's value is cluster scheduler latency, not compute."""
+    Every stage boundary is materialised eagerly and counted. Without
+    ``cfg.checkpoint_dir`` each boundary is a ``localCheckpoint``, and
+    the previous one is released as soon as the next has landed; call
+    ``CurateResult.release()`` once ``chunks`` is consumed to free the
+    last."""
     cfg = cfg or CurateConfig()
     # fail BEFORE any compute: this check reads only docs.columns, and
     # deferring it to stage 4 (its old home) meant the exact-dup and the
@@ -198,6 +213,9 @@ def curate(
     # stage boundary, and aux tables are only consumed before the next
     # stage() call.
     ckpt_state: dict[str, Any] = {"idx": 0, "retire": []}
+    # the default-mode boundary the next stage reads from (never the
+    # caller's docs: "input" gets its own localCheckpoint)
+    boundary: DataFrame | None = None
 
     def stage(df: DataFrame, name: str) -> DataFrame:
         # A boundary at every stage: materialises the stage once (no
@@ -207,11 +225,11 @@ def curate(
         # to OOM the driver just STRINGIFYING it.
         #
         # Two boundary mechanisms:
-        # - default: localCheckpoint. Zero-copy fast, but every stage's
-        #   RDD block set stays pinned on local disk until the END of
-        #   the run (ContextCleaner frees blocks only when the JVM GCs
-        #   the RDD, which driver-held references prevent) — fine at
-        #   10M rows, exhausted a 76 GB disk at 30M.
+        # - default: eager localCheckpoint. Zero-copy fast. The previous
+        #   boundary's RDD block set is unpersisted as soon as this one
+        #   has materialised, since nothing reads it after that;
+        #   ContextCleaner alone frees blocks only when the JVM GCs the
+        #   RDD, which driver-held references prevent.
         # - cfg.checkpoint_dir: write the boundary to parquet, re-read,
         #   and DELETE the previous boundary immediately — disk is
         #   bounded by two compressed columnar snapshots regardless of
@@ -219,7 +237,7 @@ def curate(
         #   release the now-unreachable shuffle files of the stage just
         #   retired. This is also the executor-loss-safe cluster shape
         #   (reliable checkpoint to HDFS/S3).
-        nonlocal last_boundary
+        nonlocal last_boundary, boundary
         if cfg.checkpoint_dir is not None:
             if name != "input":
                 df = _ckpt_write(df, name)
@@ -234,12 +252,14 @@ def curate(
             # duration, which is the exact cost checkpoint_dir exists
             # to avoid
         else:
-            df = df.localCheckpoint(eager=counts)
-        if counts:
-            stage_counts[name] = df.count()
-            now = time.monotonic()
-            stage_seconds[name] = round(now - last_boundary, 3)
-            last_boundary = now
+            df = df.localCheckpoint(eager=True)
+            if boundary is not None:
+                _release_checkpoint(boundary)
+            boundary = df
+        stage_counts[name] = df.count()
+        now = time.monotonic()
+        stage_seconds[name] = round(now - last_boundary, 3)
+        last_boundary = now
         return df
 
     def _ckpt_write(df: DataFrame, name: str) -> DataFrame:
@@ -465,19 +485,13 @@ def curate(
         # partition count derives from the (already-counted) chunk total:
         # every partition ends with up to ~open-bin-limit partial packs,
         # so tiny inputs over many partitions would bleed fill ratio; at
-        # scale chunks//64 exceeds the session default and caps there.
-        # On the counts=False fast path there is no chunk count — use the
-        # session default (production-scale inputs exceed it anyway)
+        # scale chunks//64 exceeds the session default and caps there
         default_par = int(
             chunks.sparkSession.conf.get("spark.sql.shuffle.partitions")
         )
 
-        def parts_for(n_chunks: int | None) -> int:
-            return (
-                max(1, min(default_par, n_chunks // 64))
-                if n_chunks is not None
-                else default_par
-            )
+        def parts_for(n_chunks: int) -> int:
+            return max(1, min(default_par, n_chunks // 64))
 
         def pack(df: DataFrame, num_partitions: int) -> DataFrame:
             return pack_sequences(
@@ -494,7 +508,7 @@ def curate(
                 order_cols=[cfg.id_col, "chunk_id"],
             )
 
-        n_chunks = stage_counts["chunks"] if counts else None
+        n_chunks = stage_counts["chunks"]
 
         if cfg.split_weights is not None:
             # pack each split separately: a training sequence must never
@@ -509,12 +523,9 @@ def curate(
             parts = []
             for name in sorted(cfg.split_weights):
                 share = cfg.split_weights[name] / total_w
-                split_parts = parts_for(
-                    int(n_chunks * share) if n_chunks is not None else None
-                )
                 p = pack(
                     chunks.where(F.col("split") == name).drop("split"),
-                    split_parts,
+                    parts_for(int(n_chunks * share)),
                 )
                 parts.append(
                     p.withColumn(
@@ -556,4 +567,5 @@ def curate(
         chunks=chunks,
         stage_counts=stage_counts,
         stage_seconds=stage_seconds,
+        boundary=boundary,
     )

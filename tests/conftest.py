@@ -13,3 +13,9 @@ def spark():
 
 def make_json_df(spark, docs: list[str | None], column: str = "json_data"):
     return spark.createDataFrame([(d,) for d in docs], f"{column} string")
+
+
+def persisted_rdd_ids(spark) -> set[int]:
+    # compare ids, not counts: Spark holds persisted RDDs weakly, so JVM
+    # GC can drop ones that earlier tests left unreferenced mid-test
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())

@@ -1,0 +1,44 @@
+"""The chi² and KS drift queries share their (source, bucket) rollup
+across branches without a persist that outlives the query: chi² derives
+its marginals with windows over one scan, and KS reuses the rollup's
+exchange."""
+
+from __future__ import annotations
+
+import pathlib
+import sys
+
+import pytest
+from conftest import persisted_rdd_ids
+
+sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent.parent))
+
+import __spark_entry__ as entry_mod  # noqa: E402
+
+
+@pytest.fixture(scope="module")
+def sf_dir(spark, tmp_path_factory):
+    root = tmp_path_factory.mktemp("sf")
+    rows = [
+        (i, ("web", "wiki", "news")[i % 3], 50 + (i * 37) % 900 + 200 * (i % 3 == 0))
+        for i in range(300)
+    ]
+    spark.createDataFrame(rows, "doc_id long, source string, n_chars int").write.parquet(
+        str(root / "documents.parquet")
+    )
+    return str(root)
+
+
+@pytest.mark.parametrize("name", ["drift_nchars_chi2", "drift_ks_nchars"])
+def test_drift_rollup_not_left_persisted(spark, sf_dir, name):
+    before = persisted_rdd_ids(spark)
+    out = entry_mod.queries()[name](spark, sf_dir)
+    rows = out.collect()
+    assert sorted(r["source"] for r in rows) == ["news", "web", "wiki"]
+    assert persisted_rdd_ids(spark) - before == set()
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    if name == "drift_nchars_chi2":
+        assert final.count("FileScan") == 1
+    else:
+        assert "ReusedExchange" in final

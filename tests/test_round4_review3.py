@@ -175,17 +175,13 @@ def test_run_streaming_validation_default_path_validates(spark, tmp_path):
 
 
 def test_config_fingerprint_ignores_perf_knobs():
-    """Tuning knobs (salting, histogram kernel, example cap) must not
-    invalidate resume skips; rule knobs must."""
+    """Tuning knobs (salting, example cap) must not invalidate resume
+    skips; rule knobs must."""
     from polars_genson_spark.checkpoint import config_fingerprint
 
     base = config_fingerprint(ValidationConfig())
     assert base == config_fingerprint(
-        ValidationConfig(
-            salt_buckets=99,
-            hist_impl="arrow",
-            max_violation_examples=5,
-        )
+        ValidationConfig(salt_buckets=99, max_violation_examples=5)
     )
     assert base != config_fingerprint(ValidationConfig(max_seq_len=64))
     assert base != config_fingerprint(ValidationConfig(vocab_size=1000))

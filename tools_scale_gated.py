@@ -1,9 +1,9 @@
 """Load-gated two-parallelism criterion runner.
 
-The interleaved series (tools_scale_par.sh) measures honest ratios when
-the host is quiet, but this box is shared: co-tenant bursts hit the
-4N-core run asymmetrically (an N-core job leaves 4N-N quiet-half cores
-for neighbours to burn; the 4N job fights them everywhere), and a burst
+A plain interleaved series measures honest ratios when the host is
+quiet, but on a shared host co-tenant bursts hit the 4N-core run
+asymmetrically (an N-core job leaves 4N-N quiet-half cores for
+neighbours to burn; the 4N job fights them everywhere), and a burst
 landing mid-run poisons one side of a ratio. Rather than hand-picking
 "the quiet round" after the fact, this runner makes the acceptance rule
 explicit and mechanical, BEFORE seeing the throughput:
