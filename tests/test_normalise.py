@@ -10,7 +10,10 @@ from polars_genson_spark import (
     NormaliseConfig,
     normalise_json,
 )
-from polars_genson_spark.functions.normalise import normalise_value
+from polars_genson_spark.functions.normalise import (
+    compile_document_normaliser,
+    normalise_value,
+)
 
 from conftest import make_json_df
 
@@ -133,3 +136,56 @@ def test_decode_unnest(spark):
         [(r["a"], r["b"]) for r in out.select("a", "b").collect()]
     )
     assert got == [(1, "x"), (2, None)]
+
+
+# The three kernel behaviours the jvm route of normalise_json(decode=True)
+# copies on top of from_json (tests/test_normalise_routes.py checks the
+# route against the kernel row for row).
+
+
+def test_kernel_nulls_int_in_float_field():
+    # from_json would widen 1 -> 1.0; the kernel nulls an int token
+    schema = {
+        "type": "record",
+        "name": "document",
+        "fields": [{"name": "x", "type": "float"}],
+    }
+    kernel = compile_document_normaliser(schema, NormaliseConfig())
+    assert kernel({"x": 1}) == {"x": None}
+    assert kernel({"x": 1.0}) == {"x": 1.0}
+
+
+def test_kernel_null_bare_record_is_record_of_nulls():
+    # from_json would give null for the record itself
+    schema = {
+        "type": "record",
+        "name": "document",
+        "fields": [
+            {
+                "name": "o",
+                "type": {
+                    "type": "record",
+                    "name": "o",
+                    "fields": [{"name": "p", "type": "int"}],
+                },
+            }
+        ],
+    }
+    kernel = compile_document_normaliser(schema, NormaliseConfig())
+    assert kernel({"o": None}) == {"o": {"p": None}}
+
+
+def test_kernel_empty_array_is_null_under_empty_as_null():
+    schema = {
+        "type": "record",
+        "name": "document",
+        "fields": [
+            {"name": "a", "type": {"type": "array", "items": "string"}}
+        ],
+    }
+    kernel = compile_document_normaliser(schema, NormaliseConfig())
+    assert kernel({"a": []}) == {"a": None}
+    keep = compile_document_normaliser(
+        schema, NormaliseConfig(empty_as_null=False)
+    )
+    assert keep({"a": []}) == {"a": []}
