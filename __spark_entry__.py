@@ -75,6 +75,7 @@ def entry(spark: SparkSession) -> DataFrame:
     allowed = _t(spark, sf_dir, "documents").select("source").distinct()
     cfg = ValidationConfig(token_hist_bucket=16)
     report = validate_corpus(corpus, allowed, cfg)
+    report.release()  # the verdicts are built; only violations were cached
     return report.verdicts.orderBy("source")
 
 
@@ -930,7 +931,9 @@ def q_corpus_verdicts(spark, sf_dir):
     counts/min/max/avg come straight from the corpus, the violation
     counters from the check definitions. approx_distinct (HLL) and
     passed/drifted (chi² over engine-hashed token ids) stay out of the
-    hash — they are covered by hll_uniqueness (rows-only) and pytest."""
+    hash — they are covered by hll_uniqueness (rows-only) and pytest.
+    ``validate_corpus`` is eager, so this query runs its Spark jobs while
+    the plan is built and returns a projection of a LocalRelation."""
     from polars_genson_spark.config import ValidationConfig
     from polars_genson_spark.operators.verdicts import validate_corpus
 
@@ -941,6 +944,7 @@ def q_corpus_verdicts(spark, sf_dir):
     report = validate_corpus(
         corpus, allowed, ValidationConfig(token_hist_bucket=16)
     )
+    report.release()  # the verdicts are built; only violations were cached
     return report.verdicts.select(
         "source",
         "n_rows",

@@ -210,10 +210,10 @@ def run_validation(
                 "partitionOverwriteMode", "dynamic"
             ).partitionBy(cfg.source_col).parquet(verd_dir)
     if report is not None:
-        # the writes above were the last readers. Left cached, the frames
-        # would also be served by Spark's cache manager to a later
-        # validation in this session that reads the same (since changed)
-        # files, and its verdicts would be stale.
+        # the writes above were the last readers. Left cached, the
+        # violations would also be served by Spark's cache manager to a
+        # later validation in this session that reads the same (since
+        # changed) files, and its report would be stale.
         report.release()
 
     manifest = ckpt.build_manifest(
@@ -661,12 +661,12 @@ def main(argv: list[str] | None = None) -> int:
                     .partitionBy("batch_id")
                     .parquet(args.output)
                 )
-                n_src = report.verdicts.count()
-                ok = report.verdicts.where(~F.col("passed")).count() == 0
                 report.release()  # per-batch caches, else they leak
-                batches.append(
-                    {"batch": batch_id, "sources": n_src, "all_passed": ok}
-                )
+                batches.append({
+                    "batch": batch_id,
+                    "sources": len(report.rows),
+                    "all_passed": all(r["passed"] for r in report.rows),
+                })
 
             q = run_streaming_validation(
                 spark, args.input, args.checkpoint, on_batch=on_batch

@@ -50,10 +50,13 @@ def duplicate_rows(
     df: DataFrame, cfg: ValidationConfig | None = None
 ) -> DataFrame:
     """Exact duplicate doc_ids: (doc_id, dup_count, sources). The wide
-    shuffle; run after the HLL summary has flagged which sources need it."""
+    shuffle; run after the HLL summary has flagged which sources need it.
+    NULL ids are not duplicates of each other: they are ``null_doc_id``
+    consistency violations."""
     cfg = cfg or ValidationConfig()
     return (
-        df.groupBy(cfg.doc_id_col)
+        df.where(F.col(cfg.doc_id_col).isNotNull())
+        .groupBy(cfg.doc_id_col)
         .agg(
             F.count(F.lit(1)).alias("dup_count"),
             F.array_sort(F.collect_set(cfg.source_col)).alias("sources"),
@@ -284,7 +287,9 @@ def _chi2_sf(x: float, k: int) -> float:
 def drift_from_histogram(
     hist_rows: Iterable, cfg: ValidationConfig | None = None
 ) -> list[dict]:
-    """Driver-side drift tests on (source, bucket, cnt) rows.
+    """Driver-side drift tests on (source, bucket, cnt) rows. The source
+    is read from ``cfg.source_col``; each returned dict names it
+    ``source``.
 
     For each source: the full 2×B chi² homogeneity test of (source row,
     rest row) — expected cell counts from the pooled marginals, BOTH cells
@@ -298,7 +303,9 @@ def drift_from_histogram(
     cfg = cfg or ValidationConfig()
     counts: dict[str, dict[int, int]] = {}
     for r in hist_rows:
-        counts.setdefault(r["source"], {})[int(r["bucket"])] = int(r["cnt"])
+        counts.setdefault(r[cfg.source_col], {})[int(r["bucket"])] = int(
+            r["cnt"]
+        )
     if not counts:
         return []
     all_buckets = sorted({b for d in counts.values() for b in d})

@@ -19,6 +19,8 @@ import logging
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 # THE shared split + raw-shingle expressions (text.py) — dedup shingling,
 # tokenization, and quality stats must never diverge on normalisation
 from .text import _raw_shingles, _words
@@ -68,7 +70,7 @@ def _cap_hot_buckets(
     key_schema = hot.select(*key_cols).schema
     hot_rows = hot.select(*key_cols).collect()
     hot.unpersist()
-    hot_keys = entries.sparkSession.createDataFrame(hot_rows, key_schema)
+    hot_keys = local_frame(entries.sparkSession, hot_rows, key_schema)
     return entries.join(F.broadcast(hot_keys), key_cols, "left_anti")
 
 
@@ -806,7 +808,7 @@ def near_dup_clusters(
             T.StructField("doc_id", id_type, False),
             T.StructField("cluster_id", id_type, False),
         ])
-        return pairs.sparkSession.createDataFrame(labels, schema)
+        return local_frame(pairs.sparkSession, labels, schema)
     log.info(
         "near_dup_clusters: DISTRIBUTED min-label propagation engaged "
         "(symmetrized edge set > driver_threshold=%d)", driver_threshold,

@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from .. import fsutil
 from ..config import InferenceConfig
 from ..functions import summary as S
+from ..session import local_frame
 from .infer import (
     SchemaInferenceError,
     keyed_summaries,
@@ -258,4 +259,4 @@ def schema_drift(
         "window string, added array<string>, removed array<string>, "
         "changed array<string>"
     )
-    return df.sparkSession.createDataFrame(out, schema)
+    return local_frame(df.sparkSession, out, schema)

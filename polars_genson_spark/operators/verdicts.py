@@ -6,72 +6,83 @@ from JSON columns to the pre-tokenized corpus table.
 identity partition in the target layout), so verdicts line up with the
 physical layout a 1000-executor cluster would prune on.
 
-One wide-agg pass computes stats + HLL uniqueness per source. Row-level
-violations (consistency + referential) come from a SINGLE corpus scan: the
-consistency predicate and the broadcast-left-join referential marker are
-evaluated together and exploded into violation rows, so the corpus is not
-rescanned per check. Exact duplicates are one wide shuffle with the
-per-row sources carried via ``collect_list`` — no join-back. The combined
-violations frame is persisted (violation rows are rate-bounded and small),
-so per-source counts, the verdicts join, and any downstream
-``violations.count()``/write reuse it instead of recomputing the scans.
-Drift runs on the KB-sized histogram rollup. Everything else is
-metadata-sized.
+The suite folds the corpus into three KB-sized per-source rollups and
+merges them once on the driver, the shape of the reference's
+``add_schema`` fold:
 
-The suite runs serially: ``validate_corpus`` plans the stats, violation
-and duplicate passes lazily, collects the drift histogram (the one job
-it runs itself) and returns; the remaining passes run when the persisted
-verdicts frame is first read (``finalise_summary``, or the caller's
-writes).
+- stats + HLL uniqueness (one wide aggregate, map-combined);
+- violation counts, aggregated from the violations frame;
+- the token-value drift histogram.
+
+Row-level violations (consistency + referential) come from a SINGLE
+corpus scan: the consistency predicate and the broadcast-left-join
+referential marker are evaluated together and exploded into violation
+rows. Exact duplicates are one wide shuffle with the per-row sources
+carried via ``collect_list`` — no join-back. The violations frame is
+persisted (violation rows are rate-bounded and small).
+
+``validate_corpus`` is eager: it runs ONE action, a ``collect()`` of the
+three rollups tagged and unioned, so AQE submits their map stages
+together, and that action also materialises the persisted violations.
+The driver then computes drift, merges counts and drift per source
+(null-safe: NULL is a legal source) and builds the verdicts as a JVM
+``LocalRelation``. Reading ``report.verdicts`` or ``finalise_summary``
+runs no job; what stays lazy is ``report.violations``, whose reads
+(``count()``, the report write) are served from its cache.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from functools import reduce
 from typing import Any
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..config import ValidationConfig
+from ..session import local_frame
 from .checks import consistency_reason_expr, drift_from_histogram
 from .stats import token_id_histogram
 
-
-def _nullsafe_broadcast_left(left: DataFrame, right: DataFrame, key: str) -> DataFrame:
-    """Broadcast left join that also matches NULL keys. A plain equi-join
-    never matches NULL = NULL, so a NULL-source group's violation counts
-    (and drift row) would come back null, fillna() would zero them, and a
-    partition with real violations would be reported as passed."""
-    r = right.withColumnRenamed(key, "_rkey")
-    return left.join(
-        F.broadcast(r), F.col(key).eqNullSafe(F.col("_rkey")), "left"
-    ).drop("_rkey")
+# the rollup tag column of the one collected union
+_ROLLUP = "_rollup"
+_DRIFT_FIELDS = (
+    T.StructField("chi2", T.DoubleType(), False),
+    T.StructField("ks", T.DoubleType(), False),
+    T.StructField("psi_rest", T.DoubleType(), False),
+    T.StructField("drifted", T.BooleanType(), False),
+)
+# the drift fill of a source the histogram has no row for
+_NO_DRIFT = {"chi2": 0.0, "ks": 0.0, "psi_rest": 0.0, "drifted": False}
 
 
 @dataclass
 class ValidationReport:
+    """What ``validate_corpus`` returns. ``verdicts`` is a JVM
+    ``LocalRelation`` of the per-source rows (reading it runs no rollup
+    again); ``violations`` is the persisted violation-row frame, already
+    materialised; ``drift`` holds the per-source drift dicts."""
+
     verdicts: DataFrame
     violations: DataFrame
     drift: list[dict]
     summary: dict[str, Any] = field(default_factory=dict)
-    # the input frame validate_corpus persisted for its multi-pass scan
-    # (None when the caller had already cached it)
-    _input_cache: DataFrame | None = None
+    # the verdict rows as dicts, in the verdicts frame's column order
+    rows: list[dict] = field(default_factory=list)
+    source_col: str = "source"
 
     def passed(self) -> bool:
         return bool(self.summary.get("all_passed"))
 
     def unpersist_input(self) -> None:
-        if self._input_cache is not None:
-            self._input_cache.unpersist()
-            self._input_cache = None
+        """No-op: ``validate_corpus`` releases the input cache it took
+        before it returns. Kept so existing callers keep working."""
 
     def release(self) -> None:
-        """Unpersist everything the report holds: the input cache, the
-        verdicts and the violations. Call once the last reader is done."""
-        self.unpersist_input()
-        self.verdicts.unpersist()
+        """Unpersist the violations frame. Call once its last reader is
+        done."""
         self.violations.unpersist()
 
 
@@ -84,7 +95,12 @@ def validate_corpus(
     with_fingerprint: bool = False,
 ) -> ValidationReport:
     """Run the full validation suite; returns per-source verdicts plus the
-    violation rows (lazily evaluated DataFrames).
+    violation rows.
+
+    Eager by design: the call runs one Spark action (the three per-source
+    rollups, collected together) and builds the verdicts on the driver, so
+    the returned verdicts are a ``LocalRelation`` and the violations frame
+    is already cached. Release it with ``report.release()``.
 
     ``drift_reference``: optional frame to build the drift baseline from
     instead of ``df`` itself. Drift is each-source-vs-the-rest, so when
@@ -106,17 +122,15 @@ def validate_corpus(
     c = F.col
     src = cfg.source_col
 
-    # The suite makes up to four passes over ``df`` (stats, row-level
-    # violations, duplicate rollup, drift histogram). When the caller
-    # hands in a non-cached derived frame, every pass recomputes its
-    # lineage (tokenisation etc.) from the source. Persist it for the
-    # report's lifetime — spill-backed, so at scale this degrades to
-    # local-disk re-reads instead of recompute+re-scan, the standard
-    # multi-pass trade (guide §5 "reused AND recomputing is more
-    # expensive"). Skipped when the caller already persisted (e.g. the
-    # 1M-row bench corpus) to avoid double-caching. Released by
-    # finalise_summary / report.unpersist_input(); until then Spark's
-    # LRU eviction bounds the cost.
+    # The one action reads ``df`` from up to three rollups (stats,
+    # violations, drift histogram). When the caller hands in a non-cached
+    # derived frame, each would recompute its lineage (tokenisation etc.)
+    # from the source. Persist it for the action — spill-backed, so at
+    # scale this degrades to local-disk re-reads instead of
+    # recompute+re-scan, the standard multi-pass trade (guide §5 "reused
+    # AND recomputing is more expensive"). Skipped when the caller
+    # already persisted (e.g. the 1M-row bench corpus) to avoid
+    # double-caching; released before this function returns.
     _own_cache = False
     lvl = df.storageLevel
     if not (lvl.useMemory or lvl.useDisk):
@@ -206,9 +220,12 @@ def validate_corpus(
         violation_frames.append(row_viol)
 
     # ---- exact duplicates: one wide shuffle, sources carried along ----
+    # NULL ids are not duplicates of each other (SQL's doc_id IN (...)
+    # never matches NULL); they are null_doc_id consistency violations
     if check_dup:
         dup_grp = (
-            df.groupBy(cfg.doc_id_col)
+            df.where(c(cfg.doc_id_col).isNotNull())
+            .groupBy(cfg.doc_id_col)
             .agg(
                 F.count(F.lit(1)).alias("dup_count"),
                 F.collect_list(cfg.source_col).alias("_sources"),
@@ -224,109 +241,116 @@ def validate_corpus(
         violation_frames.append(dup_viol)
 
     if violation_frames:
-        violations = violation_frames[0]
-        for vf in violation_frames[1:]:
-            violations = violations.unionByName(vf)
+        violations = reduce(DataFrame.unionByName, violation_frames)
     else:  # every row-level check disabled: empty frame, stable schema
         doc_t = df.schema[cfg.doc_id_col].dataType.simpleString()
-        violations = spark.createDataFrame(
-            [], f"check string, doc_id {doc_t}, source string, reason string"
+        violations = local_frame(
+            spark,
+            [],
+            f"check string, doc_id {doc_t}, source string, reason string",
         )
     violations = violations.persist()
 
-    # ---- per-source violation counts from the persisted frame ----
-    is_check = lambda name: (c("check") == name).cast("long")  # noqa: E731
-    count_cols = []
-    if check_cons:
-        count_cols.append(
-            F.sum(is_check("consistency")).alias("consistency_violations")
+    # ---- the three rollups, tagged and collected in ONE action ----
+    count_checks = [
+        (name, check)
+        for name, check, on in (
+            ("consistency_violations", "consistency", check_cons),
+            ("referential_violations", "referential", check_ref),
+            ("duplicate_rows", "uniqueness", check_dup),
         )
-    if check_ref:
-        count_cols.append(
-            F.sum(is_check("referential")).alias("referential_violations")
+        if on
+    ]
+    count_names = [name for name, _ in count_checks]
+    rollups = {"base": base}
+    if count_checks:
+        rollups["counts"] = violations.groupBy(c("source").alias(src)).agg(
+            *(
+                F.sum((c("check") == check).cast("long")).alias(name)
+                for name, check in count_checks
+            )
         )
-    if check_dup:
-        count_cols.append(F.sum(is_check("uniqueness")).alias("duplicate_rows"))
-    viol_counts = (
-        violations.groupBy(c("source").alias(src)).agg(*count_cols)
-        if count_cols
-        else None
-    )
-
-    # ---- drift (KB-sized rollup → driver) ----
-    drift: list[dict] = []
     if cfg.check_drift:
-        drift_src = drift_reference if drift_reference is not None else df
-        hist = token_id_histogram(drift_src, cfg).collect()
-        drift = drift_from_histogram((r.asDict() for r in hist), cfg)
+        rollups["hist"] = token_id_histogram(
+            drift_reference if drift_reference is not None else df, cfg
+        )
+    tagged = reduce(
+        lambda a, b: a.unionByName(b, allowMissingColumns=True),
+        (r.withColumn(_ROLLUP, F.lit(tag)) for tag, r in rollups.items()),
+    )
+    try:
+        collected = tagged.collect()
+    finally:
+        if _own_cache:
+            df.unpersist()
+    parts: dict[str, list[dict]] = {tag: [] for tag in rollups}
+    for r in collected:
+        d = r.asDict()
+        tag = d[_ROLLUP]
+        parts[tag].append({k: d[k] for k in rollups[tag].columns})
+
+    # ---- driver merge: counts and drift per source, null-safe ----
+    drift = drift_from_histogram(parts.get("hist", []), cfg)
+    counts = {r[src]: r for r in parts.get("counts", [])}
+    drift_by = {d["source"]: d for d in drift}
+    fields = list(base.schema.fields)
+    fields += [T.StructField(n, T.LongType(), False) for n in count_names]
     if drift:
-        drift_df = spark.createDataFrame(
-            [(d["source"], float(d["chi2"]), float(d["ks"]),
-              float(d["psi_rest"]), bool(d["drifted"]))
-             for d in drift],
-            f"{src} string, chi2 double, ks double, psi_rest double,"
-            " drifted boolean",
-        )
-    else:
-        drift_df = None
+        fields += _DRIFT_FIELDS
+    fields.append(T.StructField("passed", T.BooleanType(), True))
 
-    # ---- assemble verdicts (null-safe joins: NULL is a legal source) ----
-    verdicts = base
-    for extra in (viol_counts, drift_df):
-        if extra is not None:
-            verdicts = _nullsafe_broadcast_left(verdicts, extra, src)
-    zero = F.lit(0)
-    verdicts = verdicts.fillna(
-        {
-            **({"consistency_violations": 0} if check_cons else {}),
-            **({"referential_violations": 0} if check_ref else {}),
-            **({"duplicate_rows": 0} if check_dup else {}),
-        }
+    rows = parts["base"]
+    for row in rows:
+        got = counts.get(row[src], {})
+        for n in count_names:
+            row[n] = got.get(n) or 0
+        # max_null_rate: the stats-side pass criterion — a partition
+        # whose null-doc_id fraction exceeds the budget fails even when
+        # the row-level consistency check is disabled (default 0.0 = no
+        # nulls). Same double arithmetic as the SQL form
+        # null_doc_id <= max_null_rate * n_rows.
+        passed = float(row["null_doc_id"]) <= cfg.max_null_rate * float(
+            row["n_rows"]
+        ) and all(row[n] == 0 for n in count_names)
+        if drift:
+            d = drift_by.get(row[src], _NO_DRIFT)
+            row.update(
+                chi2=float(d["chi2"]),
+                ks=float(d["ks"]),
+                psi_rest=float(d["psi_rest"]),
+                drifted=bool(d["drifted"]),
+            )
+            passed = passed and not row["drifted"]
+        row["passed"] = passed
+    verdicts = local_frame(
+        spark,
+        [tuple(r[f.name] for f in fields) for r in rows],
+        T.StructType(fields),
     )
-    if drift_df is not None:
-        verdicts = verdicts.fillna(
-            {"drifted": False, "chi2": 0.0, "ks": 0.0, "psi_rest": 0.0}
-        )
-
-    # max_null_rate: the stats-side pass criterion — a partition whose
-    # null-doc_id fraction exceeds the budget fails even when the
-    # row-level consistency check is disabled (default 0.0 = no nulls).
-    pass_expr = (
-        c("null_doc_id") <= F.lit(cfg.max_null_rate) * c("n_rows")
-    )
-    if check_cons:
-        pass_expr = pass_expr & (c("consistency_violations") == zero)
-    if check_ref:
-        pass_expr = pass_expr & (c("referential_violations") == zero)
-    if check_dup:
-        pass_expr = pass_expr & (c("duplicate_rows") == zero)
-    if drift_df is not None:
-        pass_expr = pass_expr & (~c("drifted"))
-    verdicts = verdicts.withColumn("passed", pass_expr).persist()
-
     return ValidationReport(
         verdicts=verdicts,
         violations=violations,
         drift=drift,
-        _input_cache=df if _own_cache else None,
+        rows=rows,
+        source_col=src,
     )
 
 
 def finalise_summary(report: ValidationReport) -> dict[str, Any]:
-    """Collect the (small) verdicts table and build the run summary."""
-    rows = [r.asDict() for r in report.verdicts.collect()]
-    report.unpersist_input()
-    all_passed = all(r["passed"] for r in rows)
+    """Build the run summary from the verdict rows ``validate_corpus``
+    already holds; submits no Spark job."""
+    src = report.source_col
+    rows = [dict(r) for r in report.rows]
     report.summary = {
         "partitions": len(rows),
-        "all_passed": all_passed,
+        "all_passed": all(r["passed"] for r in rows),
         # None-safe sort: a NULL source is a legal partition key and must
         # not TypeError against the string keys
         "failed_partitions": sorted(
-            (r["source"] for r in rows if not r["passed"]),
+            (r[src] for r in rows if not r["passed"]),
             key=lambda s: (s is None, s or ""),
         ),
         "total_rows": sum(r["n_rows"] for r in rows),
-        "per_partition": {r["source"]: r for r in rows},
+        "per_partition": {r[src]: r for r in rows},
     }
     return report.summary

@@ -1,10 +1,14 @@
-"""SparkSession factory with engine defaults (AQE, Arrow, sane shuffle)."""
+"""SparkSession factory with engine defaults (AQE, Arrow, sane shuffle),
+plus two frame helpers the operators share: driver rows as a JVM
+``LocalRelation`` and a scan-parallelism floor."""
 
 from __future__ import annotations
 
 import os
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def get_spark(
@@ -84,6 +88,29 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(
+    spark: SparkSession, rows: Sequence[Sequence], schema: StructType | str
+) -> DataFrame:
+    """A frame of driver-side ``rows`` (tuples in ``schema`` field order)
+    as a JVM ``LocalRelation``. The rows travel as one pyarrow Table;
+    ``createDataFrame(list)`` would instead build a Python-RDD
+    ``LogicalRDD`` whose every read starts ``defaultParallelism`` Python
+    worker tasks. ``schema`` is a StructType or a DDL string, and its
+    types and nullability are kept as given."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) if rows else [()] * len(schema.fields)
+    table = pa.Table.from_arrays(
+        [pa.array(col, type=f.type) for col, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def spread_to_parallelism(df: DataFrame) -> DataFrame:

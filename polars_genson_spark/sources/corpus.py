@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 SOURCES = (
     [f"web-{i:02d}" for i in range(1, 16)]
     + ["books", "code", "wiki", "forum"]
@@ -116,9 +118,7 @@ def generate_corpus(
 
 
 def allowed_sources_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        [(s,) for s in ALLOWED_SOURCES], "source string"
-    )
+    return local_frame(spark, [(s,) for s in ALLOWED_SOURCES], "source string")
 
 
 def write_corpus(
