@@ -826,11 +826,7 @@ def q_embedding_topk_lsh(spark, sf_dir):
     from polars_genson_spark.operators.similarity import lsh_topk, pairwise_topk
 
     e = _t(spark, sf_dir, "embeddings").where(F.col("vec_id") < 200)
-    # cache_entries=False for this fixed 200-vector slice: recomputing
-    # the 1600-row tagged table per self-join side is cheaper than its
-    # persist round-trip (operator default stays True — the right
-    # choice for corpus-scale inputs). Same rows either way.
-    ann = lsh_topk(e, dim=64, k=3, cache_entries=False)
+    ann = lsh_topk(e, dim=64, k=3)
     exact = pairwise_topk(e, k=3)  # 200-vector slice: O(N²) is oracle-sized
     return _with_ann_recall(ann, exact)
 
@@ -852,10 +848,7 @@ def q_embedding_near_dupes(spark, sf_dir):
     e = _t(spark, sf_dir, "embeddings").where(F.col("vec_id") < 300)
     # synthetic embeddings are near-orthogonal; 0.3 yields a small
     # non-empty candidate set so the rows-only check exercises real output
-    # (cache_entries=False: fixed-slice reasoning as the LSH query)
-    return embedding_near_duplicates(
-        e, dim=64, threshold=0.3, cache_entries=False
-    )
+    return embedding_near_duplicates(e, dim=64, threshold=0.3)
 
 
 def q_embedding_topk_ivf(spark, sf_dir):
@@ -873,10 +866,7 @@ def q_embedding_topk_ivf(spark, sf_dir):
 
     e = _t(spark, sf_dir, "embeddings").where(F.col("vec_id") < 200)
     cents = _hyperplanes(64, 8, seed=7)
-    # cache_entries=False: same fixed-slice reasoning as the LSH query
-    ann = ivf_topk(
-        e, dim=64, k=3, n_probe=2, centroids=cents, cache_entries=False
-    )
+    ann = ivf_topk(e, dim=64, k=3, n_probe=2, centroids=cents)
     return _with_ann_recall(ann, pairwise_topk(e, k=3))
 
 

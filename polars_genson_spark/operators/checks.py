@@ -52,14 +52,18 @@ def duplicate_rows(
     """Exact duplicate doc_ids: (doc_id, dup_count, sources). The wide
     shuffle; run after the HLL summary has flagged which sources need it.
     NULL ids are not duplicates of each other: they are ``null_doc_id``
-    consistency violations."""
+    consistency violations. A NULL source is kept (sorted last): sources
+    are collected as structs, because ``collect_set`` drops NULLs."""
     cfg = cfg or ValidationConfig()
+    src = cfg.source_col
     return (
         df.where(F.col(cfg.doc_id_col).isNotNull())
         .groupBy(cfg.doc_id_col)
         .agg(
             F.count(F.lit(1)).alias("dup_count"),
-            F.array_sort(F.collect_set(cfg.source_col)).alias("sources"),
+            F.array_sort(
+                F.transform(F.collect_set(F.struct(src)), lambda s: s[src])
+            ).alias("sources"),
         )
         .where(F.col("dup_count") > 1)
     )

@@ -19,7 +19,7 @@ import logging
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..session import local_frame
+from ..session import checkpoint, local_frame, persist, release
 
 # THE shared split + raw-shingle expressions (text.py) — dedup shingling,
 # tokenization, and quality stats must never diverge on normalisation
@@ -42,35 +42,26 @@ def _cap_hot_buckets(
     over-full bucket are simply not candidates *via that bucket*; with
     banding they usually remain reachable through their other bands.
     The dropped-bucket list is rollup-sized (only buckets above the
-    cap), so the anti-join build side is tiny and the count we log is a
+    cap), so the anti-join build side is tiny and collecting it is a
     KB-sized aggregate, not a corpus pass.
     """
     hot = (
         entries.groupBy(*key_cols)
         .agg(F.count(F.lit(1)).alias("_n"))
         .where(F.col("_n") > bucket_max)
-        .persist()
+        .select(*key_cols)
     )
-    n_hot = hot.count()
-    if not n_hot:
-        # common case: no degenerate bucket — release the cached rollup
-        # immediately and skip the anti-join entirely
-        hot.unpersist()
-        return entries
+    # one collect of the rollup-sized hot key list, rebuilt as a literal
+    # frame: no cache stays pinned behind the returned plan
+    hot_rows = hot.collect()
+    if not hot_rows:
+        return entries  # common case: no degenerate bucket
     log.warning(
         "%s: dropping %d bucket(s) with > %d entries from candidate "
         "generation (pairs from these buckets are not examined)",
-        what, n_hot, bucket_max,
+        what, len(hot_rows), bucket_max,
     )
-    # pull the hot key list to the driver (rollup-sized by construction:
-    # only buckets above the cap) and rebuild it as a literal frame, so
-    # the cached rollup is released NOW — leaving it persisted until
-    # ContextCleaner GC accumulates pinned storage across repeated
-    # curate/bench invocations in a long-lived session
-    key_schema = hot.select(*key_cols).schema
-    hot_rows = hot.select(*key_cols).collect()
-    hot.unpersist()
-    hot_keys = local_frame(entries.sparkSession, hot_rows, key_schema)
+    hot_keys = local_frame(entries.sparkSession, hot_rows, hot.schema)
     return entries.join(F.broadcast(hot_keys), key_cols, "left_anti")
 
 
@@ -204,7 +195,6 @@ def minhash_candidates(
     num_perm: int = 64,
     bands: int = 16,
     min_jaccard: float = 0.5,
-    cache_entries: bool = True,
     bucket_max: int | None = None,
 ) -> DataFrame:
     """MinHash+LSH near-duplicate pairs: (id_a, id_b, est_jaccard).
@@ -213,8 +203,8 @@ def minhash_candidates(
     bucket become candidates; est_jaccard = fraction of matching
     signature components. The self-join runs on band buckets only.
 
-    ``cache_entries`` persists the band-entry table so the expensive
-    shingle→signature work runs ONCE instead of once per self-join side
+    The signatures and band entries are persisted, so the expensive
+    shingle→signature work runs ONCE, not once per self-join side
     (MEMORY_AND_DISK — spills rather than OOMs at scale).
 
     ``bucket_max`` (None = unlimited) drops band buckets with more
@@ -240,11 +230,9 @@ def minhash_candidates(
             f"bands={bands} must divide num_perm={num_perm}"
         )
     rows_per_band = num_perm // bands
-    sigs = minhash_signatures(
+    sigs = persist(minhash_signatures(
         df, id_col, text_col, shingle_n, num_perm
-    )
-    if cache_entries:
-        sigs = sigs.persist()
+    ))
 
     band_entries = sigs.select(
         "id",
@@ -272,8 +260,7 @@ def minhash_candidates(
             )
         ).alias("bb"),
     ).select("id", "bb.band", "bb.bhash")
-    if cache_entries:
-        band_entries = band_entries.persist()
+    band_entries = persist(band_entries)
     if bucket_max is not None:
         band_entries = _cap_hot_buckets(
             band_entries, ["band", "bhash"], bucket_max, "minhash_candidates"
@@ -367,7 +354,6 @@ def simhash_candidates(
     id_col: str = "doc_id",
     text_col: str = "text",
     max_hamming: int = 3,
-    cache_entries: bool = True,
     bucket_max: int | None = None,
     n_chunks: int = 4,
 ) -> DataFrame:
@@ -376,8 +362,8 @@ def simhash_candidates(
     shares at least one exact chunk — pigeonhole). Raise ``n_chunks`` to
     capture at a larger Hamming radius (16×4-bit guarantees ≤15) at the
     cost of ``n_chunks`` index entries per doc and noisier buckets.
-    ``cache_entries`` persists the chunk table so the 64-bit fingerprint is
-    computed once, not once per self-join side. ``bucket_max`` drops
+    The chunk table is persisted, so the 64-bit fingerprint is computed
+    once, not once per self-join side. ``bucket_max`` drops
     over-full chunk buckets before the self-join (skew guard; see
     :func:`_cap_hot_buckets`)."""
     if 64 % n_chunks:
@@ -411,8 +397,7 @@ def simhash_candidates(
             )
         ).alias("cc"),
     ).select("id", "simhash", "cc.chunk", "cc.chash")
-    if cache_entries:
-        chunks = chunks.persist()
+    chunks = persist(chunks)
     if bucket_max is not None:
         chunks = _cap_hot_buckets(
             chunks, ["chunk", "chash"], bucket_max, "simhash_candidates"
@@ -454,14 +439,13 @@ def ngram_jaccard_pairs(
     n: int = 3,
     min_jaccard: float = 0.8,
     df_max: int | None = None,
-    cache_entries: bool = True,
 ) -> DataFrame:
     """Exact Jaccard over distinct word n-grams via an inverted index:
     explode shingles → self-join on shingle → |∩| per pair → Jaccard.
 
     Exact but quadratic in bucket collisions — the verification stage
     after LSH candidate generation, or standalone at moderate scale.
-    ``cache_entries`` persists the inverted index so shingling runs once.
+    The shingle arrays and the inverted index are persisted.
 
     ``df_max`` drops shingles whose document frequency is >= df_max from
     BOTH the index and the Jaccard denominator (Jaccard over the
@@ -470,19 +454,13 @@ def ngram_jaccard_pairs(
     posting list of length L contributes L² candidate pairs, so the cap
     bounds the worst shingle's contribution to df_max².
     """
-    sh0 = with_shingles(df, text_col, n).select(
+    # the split→zip→distinct chain (array_distinct is quadratic in
+    # shingle count) dominates; un-cached, the hot-shingle rollup, the
+    # anti-join, the recount and the self-join each re-ran it (~19s of
+    # the cold 300-doc bench slice)
+    sh0 = persist(with_shingles(df, text_col, n).select(
         F.col(id_col).alias("id"), "shingles"
-    )
-    if cache_entries:
-        # persist the shingle ARRAYS before anything consumes them: the
-        # split→zip→distinct chain (array_distinct over string arrays is
-        # quadratic in shingle count) is by far the dominant cost, and
-        # un-cached the hot-shingle rollup, the anti-join, the per-doc
-        # recount, and the self-join each re-evaluated it (the cold
-        # first run of the 300-doc bench slice measured ~19s of exactly
-        # that; the old persist sat above the df_max block and only
-        # helped the final self-join).
-        sh0 = sh0.persist()
+    ))
     # explode_outer: shingles is never null/empty by construction — see
     # minhash_signatures; avoids the InferFiltersFromGenerate re-eval
     inv = sh0.select(
@@ -507,8 +485,7 @@ def ngram_jaccard_pairs(
             .join(n_kept, "id")
             .select("id", F.col("n_sh2").alias("n_sh"), "shingle")
         )
-    if cache_entries:
-        inv = inv.persist()
+    inv = persist(inv)
     a, b = inv.alias("a"), inv.alias("b")
     inter = (
         a.join(
@@ -559,12 +536,10 @@ def verify_pairs_jaccard(
     # very large |df| with few candidates, restricting df to the pair
     # ids first would be cheaper still — candidate sets after LSH are
     # collision-rate-sized, so the cache is bounded in practice.
-    sh = (
-        with_shingles(df, text_col, n)
-        .select(
+    sh = persist(
+        with_shingles(df, text_col, n).select(
             F.col(id_col).alias("_vid"), F.col("shingles").alias("_vsh")
         )
-        .persist()
     )
     joined = (
         pairs.select("id_a", "id_b")
@@ -669,15 +644,15 @@ def star_components(
         .unionByName(pairs.select(F.col("id_b").alias("doc_id")))
         .distinct()
     )
-    edges = (
+    edges = checkpoint(
         pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
         .where(F.col("u") != F.col("v"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     prev = _edge_checksum(edges)
     for _ in range(max_iterations):
-        edges = _small_star(_large_star(edges)).localCheckpoint(eager=True)
+        old, edges = edges, checkpoint(_small_star(_large_star(edges)))
+        release(old)
         cur = _edge_checksum(edges)
         if cur == prev:
             break
@@ -779,7 +754,7 @@ def near_dup_clusters(
         return star_components(pairs, max_iterations)
     if method != "label":
         raise ValueError(f"unknown method {method!r} (use 'label'/'star')")
-    edges = (
+    edges = persist(
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         .unionByName(
             pairs.select(
@@ -787,7 +762,6 @@ def near_dup_clusters(
             )
         )
         .distinct()
-        .persist()
     )
     if driver_threshold and edges.limit(driver_threshold + 1).count() <= driver_threshold:
         # Arrow transfer: two flat columns, no per-Row Python objects —
@@ -797,7 +771,7 @@ def near_dup_clusters(
             "(symmetrized edge set <= %d)", driver_threshold,
         )
         pdf = edges.toPandas()
-        edges.unpersist()
+        release(edges)
         rows = list(zip(pdf["src"].tolist(), pdf["dst"].tolist()))
         del pdf
         labels = _driver_union_find(rows)
@@ -813,11 +787,10 @@ def near_dup_clusters(
         "near_dup_clusters: DISTRIBUTED min-label propagation engaged "
         "(symmetrized edge set > driver_threshold=%d)", driver_threshold,
     )
-    labels = (
+    labels = persist(
         edges.select(F.col("src").alias("id"))
         .distinct()
         .withColumn("label", F.col("id"))
-        .persist()
     )
     changed = 0
     for _ in range(max_iterations):
@@ -829,7 +802,7 @@ def near_dup_clusters(
         # localCheckpoint truncates the per-round logical plan — with
         # plain persist the plan tree grows linearly with iterations and
         # stringifying it alone can OOM the driver on deep graphs
-        new_labels = (
+        new_labels = checkpoint(
             labels.join(neighbour_min, labels.id == neighbour_min.src, "left")
             .select(
                 "id",
@@ -838,12 +811,10 @@ def near_dup_clusters(
                 ).alias("label"),
                 (F.col("nbr_label") < F.col("label")).alias("_changed"),
             )
-        ).localCheckpoint(eager=True)
+        )
         changed = new_labels.where(F.col("_changed")).limit(1).count()
-        old = labels
-        labels = new_labels.select("id", "label")
-        if hasattr(old, "unpersist"):
-            old.unpersist()
+        release(labels)
+        labels = new_labels
         if changed == 0:
             break
     if changed != 0:
@@ -873,7 +844,7 @@ def near_dup_clusters(
                 "or use method='star' which converges in O(log n) rounds)",
                 max_iterations,
             )
-    edges.unpersist()
+    release(edges)
     return labels.select(F.col("id").alias("doc_id"), F.col("label").alias("cluster_id"))
 
 

@@ -98,13 +98,7 @@ def normalise_json(
             "use 'kv' or 'mapping'"
         )
 
-    reason = reason or python_route_reason(
-        avro_schema,
-        config,
-        norm,
-        decode,
-        df.sparkSession.conf.get("spark.sql.columnNameOfCorruptRecord"),
-    )
+    reason = reason or python_route_reason(avro_schema, config, norm, decode)
     route = "python" if reason else "jvm"
     log.info(
         "normalise_json route=%s reason=%s",
@@ -133,7 +127,10 @@ def normalise_json(
                 avro_schema, kv_encoding=norm.map_encoding == MAP_ENCODING_KV
             )
             result = result.withColumn(
-                out_name, F.from_json(F.col(out_name), dtype)
+                out_name,
+                F.from_json(
+                    F.col(out_name), dtype, _from_json_options(avro_schema)
+                ),
             )
 
     if decode and unnest:
@@ -229,7 +226,6 @@ def python_route_reason(
     config: InferenceConfig,
     norm: NormaliseConfig,
     decode: bool,
-    corrupt_record_col: str,
 ) -> str | None:
     """The first reason an inferred-schema call must take the python
     route, or None when the jvm route reproduces it exactly."""
@@ -247,13 +243,6 @@ def python_route_reason(
         or config.force_scalar_promotion
     ):
         return "force_types"
-    if _is_record(avro_schema) and any(
-        f.get("name") == corrupt_record_col
-        for f in avro_schema.get("fields", [])
-    ):
-        # from_json fills that field with the raw text of a cell that is
-        # not an object, where the kernel gives null
-        return "corrupt_record_field"
     return _schema_reason(avro_schema)
 
 
@@ -310,9 +299,16 @@ _WS = _char_class(_PY_WS)
 _NON_JSON_WS = _char_class("".join(c for c in _PY_WS if c not in _JSON_WS))
 _NULL_CELL = f"^{_WS}*$|^{_WS}*{_NON_JSON_WS}|{_NON_JSON_WS}{_WS}*$"
 
-# from_json's default 1000-character number limit would null a document
-# whose long number literal orjson reads
-_FROM_JSON_OPTIONS = {"maxNumLen": str(2**31 - 1)}
+def _from_json_options(schema: Any) -> dict[str, str]:
+    """``from_json`` options for ``schema``: no 1000-character number
+    limit (orjson reads longer literals), and a corrupt-record column no
+    top-level field is named, so no JSON key is read as that column."""
+    fields = schema.get("fields", []) if _is_record(schema) else []
+    names = {f.get("name") for f in fields}
+    corrupt = "_corrupt_record"
+    while corrupt in names:
+        corrupt = "_" + corrupt
+    return {"maxNumLen": str(2**31 - 1), "columnNameOfCorruptRecord": corrupt}
 
 
 def _null_cell(cell: Column) -> Column:
@@ -388,9 +384,8 @@ class CatalystNormaliser:
         self.empty_as_null = norm.empty_as_null
 
     def decode(self, cell: Column) -> Column:
-        return F.from_json(
-            cell, self._decode_type(self.schema), _FROM_JSON_OPTIONS
-        )
+        options = _from_json_options(self.schema)
+        return F.from_json(cell, self._decode_type(self.schema), options)
 
     def __call__(self, cell: Column, decoded: str) -> Column:
         """The normalised struct; ``decoded`` names the ``decode`` column."""

@@ -18,6 +18,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import persist
+
 _LOG = logging.getLogger(__name__)
 
 
@@ -232,14 +234,13 @@ def lsh_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     seed: int = 42,
-    cache_entries: bool = True,
     bucket_max: int | None = None,
 ) -> DataFrame:
     """Approximate all-pairs top-k: candidates only within an LSH bucket of
     any of ``n_tables`` independent tables; comparisons are bounded by
-    bucket populations, never |N|². ``cache_entries`` persists the tagged
-    table so normalisation + bucket signatures compute once, not per
-    self-join side.
+    bucket populations, never |N|². The tagged table is persisted, so
+    normalisation + bucket signatures compute once, not per self-join
+    side.
 
     ``bucket_max`` (None = unlimited) drops (table, bucket) cells with
     more entries than the cap before the self-join: one degenerate bucket
@@ -247,11 +248,9 @@ def lsh_topk(
     Vectors stay reachable through the other ``n_tables - 1`` tables."""
     from .dedup import _cap_hot_buckets
 
-    tagged = _multi_table_tagged(
+    tagged = persist(_multi_table_tagged(
         df, dim, n_planes, n_tables, id_col, vec_col, seed
-    )
-    if cache_entries:
-        tagged = tagged.persist()
+    ))
     if bucket_max is not None:
         tagged = _cap_hot_buckets(
             tagged, ["table", "bucket"], bucket_max, "lsh_topk"
@@ -316,20 +315,15 @@ def embedding_near_duplicates(
     n_planes: int = 6,
     n_tables: int = 6,
     seed: int = 42,
-    cache_entries: bool = True,
 ) -> DataFrame:
     """Embedding-cosine near-dup pairs (id_a < id_b, cosine ≥ threshold)
     via multi-table LSH blocking — the embedding leg of the dedup suite.
     High thresholds mean tiny angles, so even few planes catch near-dups
-    with high probability per table. ``cache_entries`` persists the
-    tagged table so the corpus-wide normalisation + n_tables×n_planes
-    signature computation (the dominant construction cost) runs once,
-    not once per self-join side — same treatment as :func:`lsh_topk`."""
-    tagged = _multi_table_tagged(
+    with high probability per table. The tagged table is persisted, as
+    in :func:`lsh_topk`."""
+    tagged = persist(_multi_table_tagged(
         df, dim, n_planes, n_tables, id_col, vec_col, seed
-    )
-    if cache_entries:
-        tagged = tagged.persist()
+    ))
     a, b = tagged.alias("a"), tagged.alias("b")
     return (
         a.join(
@@ -413,7 +407,6 @@ def ivf_topk(
     vec_col: str = "embedding",
     seed: int = 42,
     centroids: list[list[float]] | None = None,
-    cache_entries: bool = True,
     bucket_max: int | None = None,
 ) -> DataFrame:
     """Approximate all-pairs top-k via IVF: every vector is indexed under
@@ -454,9 +447,7 @@ def ivf_topk(
         F.col("vec_norm").alias("qvec"),
         F.explode(F.slice("_ranks", 1, n_probe)).alias("bucket"),
     )
-    if cache_entries:
-        members = members.persist()
-        queries = queries.persist()
+    members, queries = persist(members), persist(queries)
     if bucket_max is not None:
         from .dedup import _cap_hot_buckets
 
@@ -663,7 +654,6 @@ def semantic_dedup(
     vec_col: str = "embedding",
     seed: int = 7,
     centroids: list[list[float]] | None = None,
-    cache_entries: bool = True,
     return_discards: bool = False,
     pair_backend: str = "auto",
 ) -> DataFrame:
@@ -790,13 +780,11 @@ def semantic_dedup(
             F.when(not_null, top["idx"]).alias("cluster"),
             F.when(not_null, top["score"]).alias("csim"),
         )
-    if cache_entries:
-        tagged = tagged.persist()
-
     if pair_backend not in ("auto", "join", "gram"):
         raise ValueError(
             f"pair_backend must be auto|join|gram, got {pair_backend!r}"
         )
+    tagged = persist(tagged)
     if pair_backend == "auto":
         # Small populations: the codegen self-join's per-pair cost is
         # negligible and AQE can split a skewed cluster across tasks.

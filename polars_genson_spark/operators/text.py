@@ -384,17 +384,14 @@ def unigram_logprob(
     probability of its words under the corpus unigram distribution
     (lower = more typical text; high values flag gibberish/outliers).
 
-    The unigram model is the (word, count) rollup — the ONLY persisted
-    intermediate (vocabulary-sized, reusable across runs at scale:
-    persist/write it); the grand total derives from it for free. Scoring
-    re-scans the corpus once and joins words↔model on the word key
-    WITHOUT a broadcast hint — a web-scale vocabulary is far beyond
-    broadcast limits, and the shuffle join only ever carries the rollup
-    plus (id, word) pairs. (Persisting the exploded words view instead
-    would pin a corpus-token-sized cache per call — the rollup is the
-    right thing to keep.) Out-of-vocabulary words (below ``min_count``)
-    score as count 1/2 (Laplace-ish floor), keeping the expression total
-    and deterministic."""
+    The unigram model is the (word, count) rollup; its grand total joins
+    as one row computed in the same action, so nothing is cached and no
+    job runs before the plan. Scoring re-scans the corpus once
+    and joins words↔model on the word key WITHOUT a broadcast hint — a
+    web-scale vocabulary is far beyond broadcast limits. Out-of-
+    vocabulary words (below ``min_count``) score as count 1/2
+    (Laplace-ish floor), keeping the expression total and
+    deterministic."""
     words = df.select(
         F.col(id_col),
         F.explode(
@@ -404,16 +401,17 @@ def unigram_logprob(
             )
         ).alias("word"),
     ).where(F.col("word") != "")
-    wc = words.groupBy("word").agg(F.count(F.lit(1)).alias("c")).persist()
-    # grand total from the vocabulary-sized rollup, not a second scan
-    total = wc.agg(F.sum("c")).first()[0] or 1
+    wc = words.groupBy("word").agg(F.count(F.lit(1)).alias("c"))
+    total = wc.agg(
+        F.coalesce(F.sum("c"), F.lit(1)).cast("double").alias("_total")
+    )
     freq = wc.where(F.col("c") >= min_count)
-    scored = words.join(freq, "word", "left").select(
+    scored = words.join(freq, "word", "left").crossJoin(total).select(
         id_col,
         (
             -F.log2(
                 F.coalesce(F.col("c").cast("double"), F.lit(0.5))
-                / F.lit(float(total))
+                / F.col("_total")
             )
         ).alias("nll"),
     )

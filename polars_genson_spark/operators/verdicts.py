@@ -42,7 +42,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..config import ValidationConfig
-from ..session import local_frame
+from ..session import local_frame, persist, release
 from .checks import consistency_reason_expr, drift_from_histogram
 from .stats import token_id_histogram
 
@@ -81,9 +81,9 @@ class ValidationReport:
         before it returns. Kept so existing callers keep working."""
 
     def release(self) -> None:
-        """Unpersist the violations frame. Call once its last reader is
-        done."""
-        self.violations.unpersist()
+        """Release the violations frame, as leaving an enclosing
+        ``owned_caches()`` block does. Call once its last reader is done."""
+        release(self.violations)
 
 
 def validate_corpus(
@@ -131,11 +131,10 @@ def validate_corpus(
     # AND recomputing is more expensive"). Skipped when the caller
     # already persisted (e.g. the 1M-row bench corpus) to avoid
     # double-caching; released before this function returns.
-    _own_cache = False
     lvl = df.storageLevel
-    if not (lvl.useMemory or lvl.useDisk):
+    own_input = not (lvl.useMemory or lvl.useDisk)
+    if own_input:
         df = df.persist()
-        _own_cache = True
 
     fp_cols = (
         [
@@ -221,21 +220,23 @@ def validate_corpus(
 
     # ---- exact duplicates: one wide shuffle, sources carried along ----
     # NULL ids are not duplicates of each other (SQL's doc_id IN (...)
-    # never matches NULL); they are null_doc_id consistency violations
+    # never matches NULL); they are null_doc_id consistency violations.
+    # Sources ride in structs: collect_list drops NULLs, a legal source
     if check_dup:
         dup_grp = (
             df.where(c(cfg.doc_id_col).isNotNull())
             .groupBy(cfg.doc_id_col)
             .agg(
                 F.count(F.lit(1)).alias("dup_count"),
-                F.collect_list(cfg.source_col).alias("_sources"),
+                F.collect_list(F.struct(c(src).alias("source")))
+                .alias("_sources"),
             )
             .where(F.col("dup_count") > 1)
         )
         dup_viol = dup_grp.select(
             F.lit("uniqueness").alias("check"),
             c(cfg.doc_id_col).alias("doc_id"),
-            F.explode("_sources").alias("source"),
+            F.inline("_sources"),
             F.lit("duplicate_doc_id").alias("reason"),
         )
         violation_frames.append(dup_viol)
@@ -249,7 +250,7 @@ def validate_corpus(
             [],
             f"check string, doc_id {doc_t}, source string, reason string",
         )
-    violations = violations.persist()
+    violations = persist(violations)
 
     # ---- the three rollups, tagged and collected in ONE action ----
     count_checks = [
@@ -281,7 +282,7 @@ def validate_corpus(
     try:
         collected = tagged.collect()
     finally:
-        if _own_cache:
+        if own_input:
             df.unpersist()
     parts: dict[str, list[dict]] = {tag: [] for tag in rollups}
     for r in collected:

@@ -33,6 +33,7 @@ from .operators.dedup import (
 from .operators.decontaminate import contaminated_docs
 from .operators.sample import stratified_sample
 from .operators.text import chunk_tokens, with_quality, with_redactions
+from .session import owned_caches, release
 
 
 @dataclass
@@ -136,16 +137,8 @@ class CurateResult:
         """Free the final stage boundary's blocks once ``chunks`` has been
         consumed (the earlier boundaries are freed as curate runs)."""
         if self.boundary is not None:
-            _release_checkpoint(self.boundary)
+            release(self.boundary)
             self.boundary = None
-
-
-def _release_checkpoint(df: DataFrame) -> None:
-    # a localCheckpoint frame has no cache-manager entry, so unpersist()
-    # is a no-op; unpersist the checkpointed RDD under its LogicalRDD
-    plan = df._jdf.queryExecution().analyzed()
-    if plan.getClass().getSimpleName() == "LogicalRDD":
-        plan.rdd().unpersist(True)
 
 
 def _tokens_expr(text_col: str, vocab: int):
@@ -191,7 +184,9 @@ def curate(
     ``cfg.checkpoint_dir`` each boundary is a ``localCheckpoint``, and
     the previous one is released as soon as the next has landed; call
     ``CurateResult.release()`` once ``chunks`` is consumed to free the
-    last."""
+    last. A stage whose operators cache intermediates builds inside its
+    own ``owned_caches()`` block, which frees them once the stage's
+    boundary has landed."""
     cfg = cfg or CurateConfig()
     # fail BEFORE any compute: this check reads only docs.columns, and
     # deferring it to stage 4 (its old home) meant the exact-dup and the
@@ -254,7 +249,7 @@ def curate(
         else:
             df = df.localCheckpoint(eager=True)
             if boundary is not None:
-                _release_checkpoint(boundary)
+                release(boundary)
             boundary = df
         stage_counts[name] = df.count()
         now = time.monotonic()
@@ -312,44 +307,45 @@ def curate(
     # 2. near-dup dedup: LSH candidates → exact-Jaccard verify →
     #    connected components → drop everything but each cluster's min id
     if cfg.near_dup:
-        cand = minhash_candidates(
-            cur,
-            id_col=cfg.id_col,
-            text_col=cfg.text_col,
-            shingle_n=cfg.shingle_n,
-            num_perm=cfg.minhash_num_perm,
-            bands=cfg.minhash_bands,
-            min_jaccard=cfg.min_jaccard,
-            bucket_max=cfg.minhash_bucket_max,
-        ).select("id_a", "id_b")
-        cand = aux_boundary(cand, "near_candidates")
-        cand_docs = (
-            cand.select(F.col("id_a").alias(cfg.id_col))
-            .unionByName(cand.select(F.col("id_b").alias(cfg.id_col)))
-            .distinct()
-            .join(cur, cfg.id_col)
-        )
-        verified = ngram_jaccard_pairs(
-            cand_docs,
-            id_col=cfg.id_col,
-            text_col=cfg.text_col,
-            n=cfg.shingle_n,
-            min_jaccard=cfg.min_jaccard,
-            df_max=cfg.jaccard_df_max,
-        )
-        verified = aux_boundary(verified, "near_verified")
-        clusters = near_dup_clusters(verified, method=cfg.cluster_method)
-        losers = clusters.where(
-            F.col("doc_id") != F.col("cluster_id")
-        ).select(F.col("doc_id").alias(cfg.id_col))
-        # no broadcast hint: near-dup "losers" are dup-rate-sized (easily
-        # 20-50% of a web corpus — billions of ids at 100 TB), so a forced
-        # broadcast would OOM. AQE picks broadcast when actually small;
-        # otherwise this is a shuffle anti-join on the 8-byte id.
-        cur = stage(
-            cur.join(losers, cfg.id_col, "left_anti"),
-            "near_dedup",
-        )
+        with owned_caches():
+            cand = minhash_candidates(
+                cur,
+                id_col=cfg.id_col,
+                text_col=cfg.text_col,
+                shingle_n=cfg.shingle_n,
+                num_perm=cfg.minhash_num_perm,
+                bands=cfg.minhash_bands,
+                min_jaccard=cfg.min_jaccard,
+                bucket_max=cfg.minhash_bucket_max,
+            ).select("id_a", "id_b")
+            cand = aux_boundary(cand, "near_candidates")
+            cand_docs = (
+                cand.select(F.col("id_a").alias(cfg.id_col))
+                .unionByName(cand.select(F.col("id_b").alias(cfg.id_col)))
+                .distinct()
+                .join(cur, cfg.id_col)
+            )
+            verified = ngram_jaccard_pairs(
+                cand_docs,
+                id_col=cfg.id_col,
+                text_col=cfg.text_col,
+                n=cfg.shingle_n,
+                min_jaccard=cfg.min_jaccard,
+                df_max=cfg.jaccard_df_max,
+            )
+            verified = aux_boundary(verified, "near_verified")
+            clusters = near_dup_clusters(verified, method=cfg.cluster_method)
+            losers = clusters.where(
+                F.col("doc_id") != F.col("cluster_id")
+            ).select(F.col("doc_id").alias(cfg.id_col))
+            # no broadcast hint: near-dup "losers" are dup-rate-sized
+            # (easily 20-50% of a web corpus), so a forced broadcast would
+            # OOM. AQE picks broadcast when actually small; otherwise this
+            # is a shuffle anti-join on the 8-byte id.
+            cur = stage(
+                cur.join(losers, cfg.id_col, "left_anti"),
+                "near_dedup",
+            )
 
     # 2b. semantic dedup (SemDeDup): only docs whose embedding survives
     #     the cluster-local rank-discard stay — catches paraphrase-level
@@ -357,19 +353,21 @@ def curate(
     if embeddings is not None:
         from .operators.similarity import semantic_dedup
 
-        dropped = semantic_dedup(
-            embeddings,
-            dim=cfg.embedding_dim,
-            n_clusters=cfg.semantic_clusters,
-            threshold=cfg.semantic_threshold,
-            id_col=cfg.embedding_id_col,
-            return_discards=True,
-        ).select(F.col("id").alias(cfg.id_col))
-        # dup-rate-sized discard set — no broadcast hint (see near_dedup)
-        cur = stage(
-            cur.join(dropped, cfg.id_col, "left_anti"),
-            "semantic_dedup",
-        )
+        with owned_caches():
+            dropped = semantic_dedup(
+                embeddings,
+                dim=cfg.embedding_dim,
+                n_clusters=cfg.semantic_clusters,
+                threshold=cfg.semantic_threshold,
+                id_col=cfg.embedding_id_col,
+                return_discards=True,
+            ).select(F.col("id").alias(cfg.id_col))
+            # dup-rate-sized discard set — no broadcast hint (see
+            # near_dedup)
+            cur = stage(
+                cur.join(dropped, cfg.id_col, "left_anti"),
+                "semantic_dedup",
+            )
 
     # 2c. semantic decontamination: embedding-level eval-leak catch
     #     (paraphrases the n-gram stage below cannot see)

@@ -1,11 +1,12 @@
 """SparkSession factory with engine defaults (AQE, Arrow, sane shuffle),
-plus two frame helpers the operators share: driver rows as a JVM
-``LocalRelation`` and a scan-parallelism floor."""
+plus the frame helpers operators share: driver rows as a JVM
+``LocalRelation``, a scan-parallelism floor, and cache ownership."""
 
 from __future__ import annotations
 
 import os
-from collections.abc import Sequence
+from collections.abc import Iterator, Sequence
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
@@ -127,3 +128,47 @@ def spread_to_parallelism(df: DataFrame) -> DataFrame:
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
+
+
+
+# the frames persisted inside each open owned_caches() block, innermost last
+_scopes: list[list[DataFrame]] = []
+
+
+def _own(df: DataFrame) -> DataFrame:
+    if _scopes:
+        _scopes[-1].append(df)
+    return df
+
+
+def persist(df: DataFrame) -> DataFrame:
+    """``df.persist()``, released on leaving the innermost open
+    :func:`owned_caches` block; outside one it stays with the caller."""
+    return _own(df.persist())
+
+
+def checkpoint(df: DataFrame) -> DataFrame:
+    """``df.localCheckpoint(eager=True)``, owned as :func:`persist` is."""
+    return _own(df.localCheckpoint(eager=True))
+
+
+def release(df: DataFrame) -> None:
+    """Free a frame :func:`persist` or :func:`checkpoint` returned: its
+    cache entry, or the checkpointed RDD (a checkpoint has no entry)."""
+    df.unpersist()
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.getClass().getSimpleName() == "LogicalRDD":
+        plan.rdd().unpersist(True)
+
+
+@contextmanager
+def owned_caches() -> Iterator[None]:
+    """On leaving the block, release every frame :func:`persist` or
+    :func:`checkpoint` took while it was the innermost open block. Consume
+    the frames that read them inside it."""
+    _scopes.append([])
+    try:
+        yield
+    finally:
+        for df in _scopes.pop():
+            release(df)

@@ -1,8 +1,16 @@
 from __future__ import annotations
 
+import sys
+from pathlib import Path
+
 import pytest
 
-from polars_genson_spark.session import get_spark
+# the checkout these tests belong to: its modules are the ones imported,
+# and subprocesses run from it
+REPO_ROOT = str(Path(__file__).resolve().parent.parent)
+sys.path.insert(0, REPO_ROOT)
+
+from polars_genson_spark.session import get_spark  # noqa: E402
 
 
 @pytest.fixture(scope="session")
@@ -13,6 +21,17 @@ def spark():
 
 def make_json_df(spark, docs: list[str | None], column: str = "json_data"):
     return spark.createDataFrame([(d,) for d in docs], f"{column} string")
+
+
+def jobs_in(spark, group: str, fn):
+    """``(fn(), number of Spark jobs fn submitted)``."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def persisted_rdd_ids(spark) -> set[int]:

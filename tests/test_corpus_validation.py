@@ -166,8 +166,7 @@ def test_validation_invariant_to_partition_layout(spark):
             tuple(r) for r in report.verdicts.drop("approx_distinct").collect()
         )
         violations = sorted(tuple(r) for r in report.violations.collect())
-        report.verdicts.unpersist()
-        report.violations.unpersist()
+        report.release()
         return verdicts, violations
 
     v1 = run(base.repartition(3))

@@ -6,14 +6,10 @@ schema.rs: "No JSON documents found to process")."""
 
 from __future__ import annotations
 
-import sys
-
 import pytest
 
-sys.path.insert(0, "/root/repo")
-
-import __spark_entry__ as entry_mod  # noqa: E402
-from polars_genson_spark import SchemaInferenceError  # noqa: E402
+import __spark_entry__ as entry_mod
+from polars_genson_spark import SchemaInferenceError
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",

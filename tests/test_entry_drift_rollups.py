@@ -1,19 +1,14 @@
 """The chi² and KS drift queries share their (source, bucket) rollup
-across branches without a persist that outlives the query: chi² derives
-its marginals with windows over one scan, and KS reuses the rollup's
-exchange."""
+across branches without a persist: chi² derives its marginals with
+windows over one scan, and KS reuses the rollup's exchange. (That no
+cache outlives them is the registry-wide contract in
+test_entry_oracle.py.)"""
 
 from __future__ import annotations
 
-import pathlib
-import sys
-
 import pytest
-from conftest import persisted_rdd_ids
 
-sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent.parent))
-
-import __spark_entry__ as entry_mod  # noqa: E402
+import __spark_entry__ as entry_mod
 
 
 @pytest.fixture(scope="module")
@@ -31,11 +26,9 @@ def sf_dir(spark, tmp_path_factory):
 
 @pytest.mark.parametrize("name", ["drift_nchars_chi2", "drift_ks_nchars"])
 def test_drift_rollup_not_left_persisted(spark, sf_dir, name):
-    before = persisted_rdd_ids(spark)
     out = entry_mod.queries()[name](spark, sf_dir)
     rows = out.collect()
     assert sorted(r["source"] for r in rows) == ["news", "web", "wiki"]
-    assert persisted_rdd_ids(spark) - before == set()
     plan = out._jdf.queryExecution().executedPlan().toString()
     final = plan.split("== Initial Plan ==")[0]
     if name == "drift_nchars_chi2":

@@ -1,20 +1,24 @@
 """Mimic the driver's correctness gate locally: run every queries() entry
 at sf0.01 and compare against its oracle_sql() via DuckDB — row count,
-column names, and order-insensitive value hash."""
+column names, and order-insensitive value hash.
+
+Each query is built and consumed inside ``owned_caches()``: it must
+leave no persisted RDD behind, and building its plan may submit one job
+per parquet read (the footer read) unless it is declared eager."""
 
 from __future__ import annotations
 
 import decimal
 import hashlib
 import math
-import sys
 
 import duckdb
 import pytest
+from conftest import jobs_in, persisted_rdd_ids
+from pyspark.sql.readwriter import DataFrameReader
 
-sys.path.insert(0, "/root/repo")
-
-import __spark_entry__ as entry_mod  # noqa: E402
+import __spark_entry__ as entry_mod
+from polars_genson_spark.session import owned_caches
 
 # override with SPARK_GRAFT_ORACLE_SF=/root/testdata/sf0.1 to stress the
 # hash gate at 10x the driver's comparison scale
@@ -73,12 +77,50 @@ def _value_hash(rows: list[dict]) -> str:
 ORACLED = sorted(entry_mod.oracle_sql().keys())
 ALL = sorted(entry_mod.queries().keys())
 
+# queries whose plan building runs Spark jobs beyond the footer reads
+EAGER = {
+    "corpus_verdicts": "validate_corpus runs its one action before returning",
+    "near_dup_clusters": "connected components run before the labels return",
+    "semantic_dedup": "the vector-length probe sizes and checks the input",
+    "semantic_dedup_gram": "the vector-length probe sizes and checks the input",
+    "bpe_tokenize_docs": "BPE merges are trained from collected word counts",
+    "bpe_roundtrip_docs": "BPE merges are trained from collected word counts",
+    "normalise_events_props": "the schema is inferred to build the decoder",
+    "normalise_decode_events": "the schema is inferred to build the decoder",
+    "schema_infer_events_props": "the inferred schema is a driver-side result",
+    "schema_drift_events": "per-window schemas are inferred and diffed",
+    "temperature_mix_docs": "per-source counts set the sampling rates",
+}
+
+
+def _run_owned(spark, monkeypatch, name, consume):
+    """``(frame, consume(frame))`` for query ``name``, under the contract
+    the module docstring states."""
+    reads = []
+    parquet = DataFrameReader.parquet
+    monkeypatch.setattr(
+        DataFrameReader, "parquet",
+        lambda self, *p, **o: reads.append(p) or parquet(self, *p, **o),
+    )
+    before = persisted_rdd_ids(spark)
+    with owned_caches():
+        sdf, build_jobs = jobs_in(
+            spark, f"build-{name}",
+            lambda: entry_mod.queries()[name](spark, SF_DIR),
+        )
+        out = consume(sdf)
+    assert persisted_rdd_ids(spark) <= before, f"{name}: caches left"
+    # exact both ways, so the declared eager set cannot go stale
+    assert (build_jobs > len(reads)) == (name in EAGER), (
+        f"{name}: {build_jobs} jobs while building, {len(reads)} reads"
+    )
+    return sdf, out
+
 
 @pytest.mark.parametrize("name", ORACLED)
-def test_query_matches_oracle(spark, ddb, name):
-    qfn = entry_mod.queries()[name]
-    sdf = qfn(spark, SF_DIR)
-    spark_rows = [r.asDict() for r in sdf.collect()]
+def test_query_matches_oracle(spark, ddb, monkeypatch, name):
+    sdf, rows = _run_owned(spark, monkeypatch, name, lambda d: d.collect())
+    spark_rows = [r.asDict() for r in rows]
 
     cur = ddb.execute(entry_mod.oracle_sql()[name])
     cols = [d[0] for d in cur.description]
@@ -108,10 +150,9 @@ def test_query_matches_oracle(spark, ddb, name):
 @pytest.mark.parametrize(
     "name", [n for n in ALL if n not in ORACLED]
 )
-def test_rows_only_queries_run(spark, name):
-    qfn = entry_mod.queries()[name]
-    sdf = qfn(spark, SF_DIR)
-    assert sdf.count() >= 0
+def test_rows_only_queries_run(spark, monkeypatch, name):
+    sdf, n = _run_owned(spark, monkeypatch, name, lambda d: d.count())
+    assert n >= 0
     assert len(sdf.schema.fields) > 0
 
 

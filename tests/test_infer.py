@@ -13,7 +13,7 @@ from polars_genson_spark import (
 )
 from pyspark.sql import types as T
 
-from conftest import make_json_df
+from conftest import REPO_ROOT, make_json_df
 
 
 F1 = [
@@ -260,7 +260,7 @@ def test_cli_pq_column(spark, tmp_path):
     out = subprocess.run(
         [_sys.executable, "-m", "polars_genson_spark.cli",
          "--pq-column", "js", "--ndjson", pq],
-        capture_output=True, text=True, cwd="/root/repo", check=True,
+        capture_output=True, text=True, cwd=REPO_ROOT, check=True,
     )
     schema = _json.loads(out.stdout)
     assert schema["properties"]["a"] == {"type": "integer"}
@@ -270,7 +270,7 @@ def test_cli_pq_column(spark, tmp_path):
     norm = subprocess.run(
         [_sys.executable, "-m", "polars_genson_spark.cli",
          "--pq-column", "js", "--ndjson", "--normalise", pq],
-        capture_output=True, text=True, cwd="/root/repo", check=True,
+        capture_output=True, text=True, cwd=REPO_ROOT, check=True,
     )
     lines = [l for l in norm.stdout.splitlines() if l.strip()]
     assert len(lines) == 3

@@ -7,6 +7,7 @@ import json
 import os
 
 from pyspark.sql import functions as F
+from conftest import REPO_ROOT
 
 from polars_genson_spark import checkpoint as ckpt
 from polars_genson_spark.config import ValidationConfig
@@ -299,13 +300,13 @@ def test_stream_validate_cli_resumes(tmp_path):
     gen = subprocess.run(
         [sys.executable, "-m", "polars_genson_spark.jobs", "generate",
          "--output", corpus, "--rows", "2000", "--seed", "5"],
-        capture_output=True, text=True, cwd="/root/repo", env=env,
+        capture_output=True, text=True, cwd=REPO_ROOT, env=env,
     )
     assert gen.returncode == 0, gen.stderr[-2000:]
     r1 = subprocess.run(
         [sys.executable, "-m", "polars_genson_spark.jobs", "stream-validate",
          "--input", corpus, "--output", out, "--checkpoint", cp],
-        capture_output=True, text=True, cwd="/root/repo", env=env,
+        capture_output=True, text=True, cwd=REPO_ROOT, env=env,
     )
     assert r1.returncode == 0, r1.stderr[-2000:]
     b1 = json.loads(r1.stdout.strip().splitlines()[-1])["batches"]
@@ -313,7 +314,7 @@ def test_stream_validate_cli_resumes(tmp_path):
     r2 = subprocess.run(
         [sys.executable, "-m", "polars_genson_spark.jobs", "stream-validate",
          "--input", corpus, "--output", out, "--checkpoint", cp],
-        capture_output=True, text=True, cwd="/root/repo", env=env,
+        capture_output=True, text=True, cwd=REPO_ROOT, env=env,
     )
     assert json.loads(r2.stdout.strip().splitlines()[-1])["batches"] == []
 
@@ -334,7 +335,7 @@ def test_compact_cli_reduces_file_count(spark, tmp_path):
         [sys.executable, "-m", "polars_genson_spark.jobs", "compact",
          "--input", src_dir, "--output", out_dir, "--target-mb", "512",
          "--sort-by", "doc_id"],
-        capture_output=True, text=True, cwd="/root/repo", env=env,
+        capture_output=True, text=True, cwd=REPO_ROOT, env=env,
     )
     assert r.returncode == 0, r.stderr[-2000:]
     stats = json.loads(r.stdout.strip().splitlines()[-1])
@@ -449,7 +450,7 @@ def test_tokenize_cli_then_validate_autovocab(tmp_path):
         [sys.executable, "-m", "polars_genson_spark.jobs", "tokenize",
          "--input", "/root/testdata/sf0.001/documents.parquet",
          "--output", table, "--n-merges", "60"],
-        capture_output=True, text=True, cwd="/root/repo", env=env,
+        capture_output=True, text=True, cwd=REPO_ROOT, env=env,
     )
     assert t.returncode == 0, t.stderr[-2000:]
     info = json.loads(t.stdout.strip().splitlines()[-1])
@@ -460,7 +461,7 @@ def test_tokenize_cli_then_validate_autovocab(tmp_path):
     v = subprocess.run(
         [sys.executable, "-m", "polars_genson_spark.jobs", "validate",
          "--input", table, "--output", run],
-        capture_output=True, text=True, cwd="/root/repo", env=env,
+        capture_output=True, text=True, cwd=REPO_ROOT, env=env,
     )
     # planted-free real text + self-trained vocab: consistency must be
     # clean; referential fails by design vs the default allowed dim, so
@@ -495,7 +496,7 @@ def test_curate_packs_then_validate_packs(tmp_path):
          "--output", packs, "--chunk-size", "64", "--no-near-dup",
          "--pack-context-len", "256", "--pack-pad-id", "0",
          "--split", "train:8,val:1,test:1", "--shuffle-seed", "5"],
-        capture_output=True, text=True, cwd="/root/repo", env=env,
+        capture_output=True, text=True, cwd=REPO_ROOT, env=env,
     )
     assert c.returncode == 0, c.stderr[-2000:]
     summary = json.loads(c.stdout.strip().splitlines()[-1])
@@ -504,7 +505,7 @@ def test_curate_packs_then_validate_packs(tmp_path):
     v = subprocess.run(
         [sys.executable, "-m", "polars_genson_spark.jobs", "validate",
          "--input", packs, "--output", run, "--packs"],
-        capture_output=True, text=True, cwd="/root/repo", env=env,
+        capture_output=True, text=True, cwd=REPO_ROOT, env=env,
     )
     assert v.returncode == 0, (v.stdout[-500:], v.stderr[-2000:])
     out = json.loads(v.stdout.strip().splitlines()[-1])

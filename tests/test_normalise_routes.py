@@ -100,7 +100,8 @@ def test_events_docs_take_the_jvm_route(spark, caplog, unnest):
 # Python route reads null: ints in a float field (a), a null or missing
 # bare record (b), empty and nested empty arrays, int64 overflow,
 # duplicate keys, non-object cells, blank and badly padded cells, a
-# number literal longer than from_json's default limit
+# number literal longer than from_json's default limit, a key named like
+# the session's corrupt-record column
 EDGE_CELLS = [
     '{"id": 1, "score": 1.5, "tags": ["x"], "meta": {"a": 1, "b": "q"},'
     ' "arr": [[], [1.5, 2]], "ints": [1, 9223372036854775808],'
@@ -124,6 +125,7 @@ EDGE_CELLS = [
     '{"id": 9, "score": 1.25, "meta": {"a": 1, "b": "v"}} ',
     '{"id": 10, "score": 1.' + "0" * 1200 + '5, "meta": {"a": 1, "b": "v"}}',
     '{"id": 11, "score": -0, "meta": {"a": -0, "b": "v"}, "o": {}}',
+    '{"id": 12, "meta": {"a": 1, "b": "v"}, "_corrupt_record": "x"}',
 ]
 
 
@@ -144,6 +146,7 @@ def test_jvm_route_matches_python_route_on_edge_cells(
     assert want[1]["score"] is None  # int token in a float field
     assert want[5]["meta"] is not None and want[5]["meta"]["a"] is None
     assert want[8]["meta"] is None  # blank cell: null, not a record
+    assert want[16]["_corrupt_record"] == "x"
 
 
 # one call per Python-route reason: (cells, normalise_json kwargs)
@@ -174,7 +177,6 @@ INELIGIBLE = {
         {"config": InferenceConfig(unify_maps=True)},
     ),
     "case_collision": (['{"a": 1, "A": 2}'], {}),
-    "corrupt_record_field": (['{"_corrupt_record": "x", "a": 1}'], {}),
 }
 
 
@@ -199,7 +201,7 @@ def test_route_reason_for_types_outside_the_subset():
 
     def reason(ftype):
         schema = {**record, "fields": [{"name": "f", "type": ftype}]}
-        return python_route_reason(schema, cfg, norm, True, "_corrupt_record")
+        return python_route_reason(schema, cfg, norm, True)
 
     assert reason("bytes") == "type"
     assert reason({"type": "enum", "symbols": ["A"]}) == "type"
@@ -343,7 +345,7 @@ def test_jvm_route_equals_python_route(spark, cells):
     schema = _infer_avro(cells)
     norm = NormaliseConfig()
     assert python_route_reason(
-        schema, InferenceConfig(), norm, True, "_corrupt_record"
+        schema, InferenceConfig(), norm, True
     ) is None
 
     # both routes side by side in one frame: one Spark job per example

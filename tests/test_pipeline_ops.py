@@ -307,9 +307,7 @@ def test_semantic_dedup_keeps_least_typical(spark):
         (4, [0.0, 1.0, 0.0, 0.0]),    # cluster 1 singleton
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    out = semantic_dedup(
-        df, dim=4, threshold=0.9, centroids=cents, cache_entries=False
-    )
+    out = semantic_dedup(df, dim=4, threshold=0.9, centroids=cents)
     got = {r["id"]: r["cluster"] for r in out.collect()}
     # 1 and 2 are ~0.997 cosine: 2 has lower centroid_sim and survives
     assert set(got) == {2, 3, 4}
@@ -324,9 +322,7 @@ def test_semantic_dedup_cluster_locality(spark):
     cents = [[1.0, 0.0], [0.0, 1.0]]
     rows = [(1, [1.0, 0.99]), (2, [0.99, 1.0])]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    out = semantic_dedup(
-        df, dim=2, threshold=0.9, centroids=cents, cache_entries=False
-    )
+    out = semantic_dedup(df, dim=2, threshold=0.9, centroids=cents)
     assert {r["id"] for r in out.collect()} == {1, 2}
 
 
@@ -442,18 +438,14 @@ def test_semantic_dedup_probe_null_and_tail_mismatch(spark):
         [(1, None), (2, [1.0, 0.0]), (3, [0.0, 1.0])],
         "vec_id long, embedding array<float>",
     )
-    out = semantic_dedup(
-        ok, dim=2, centroids=[[1.0, 0.0], [0.0, 1.0]], cache_entries=False
-    )
+    out = semantic_dedup(ok, dim=2, centroids=[[1.0, 0.0], [0.0, 1.0]])
     assert out.count() == 3  # null vector survives with null centroid_sim
     # valid first row + short later row: MUST raise
     bad = spark.createDataFrame(
         [(1, [1.0, 0.0]), (2, [1.0])], "vec_id long, embedding array<float>"
     )
     with _pytest.raises(ValueError, match="lengths span"):
-        semantic_dedup(
-            bad, dim=2, centroids=[[1.0, 0.0]], cache_entries=False
-        )
+        semantic_dedup(bad, dim=2, centroids=[[1.0, 0.0]])
 
 
 def test_namespace_merge_schemas_per_row(spark):

@@ -39,6 +39,7 @@ import os
 
 import pytest
 import yaml
+from conftest import REPO_ROOT
 
 from polars_genson_spark import infer_json_schema
 from polars_genson_spark.cli import parse_cli_args
@@ -144,7 +145,7 @@ def test_cli_end_to_end(tmp_path):
         [_sys.executable, "-m", "polars_genson_spark.cli", "--ndjson", str(f)],
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=REPO_ROOT,
         check=True,
     )
     schema = json.loads(proc.stdout)

@@ -8,6 +8,7 @@ from datetime import datetime, timedelta
 
 import pytest
 from pyspark.sql import functions as F
+from conftest import REPO_ROOT
 
 from polars_genson_spark.operators.dedup import near_dup_clusters
 from polars_genson_spark.operators.decontaminate import (
@@ -232,7 +233,7 @@ def test_curate_cli(tmp_path):
             "--output", str(tmp_path / "chunks"),
             "--chunk-size", "64", "--no-near-dup",
         ],
-        capture_output=True, text=True, cwd="/root/repo", check=True,
+        capture_output=True, text=True, cwd=REPO_ROOT, check=True,
     )
     summary = _json.loads(out.stdout.strip().splitlines()[-1])
     assert summary["chunks"] > 0 and summary["input"] >= summary["quality"]

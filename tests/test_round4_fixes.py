@@ -6,6 +6,7 @@ release."""
 from __future__ import annotations
 
 import pytest
+from conftest import REPO_ROOT
 
 from polars_genson_spark.session import get_spark
 
@@ -242,7 +243,7 @@ def test_validate_cli_survives_sigkill(tmp_path):
 
     corpus_dir = str(tmp_path / "corpus")
     run_dir = str(tmp_path / "run")
-    env = {**os.environ, "PYTHONPATH": "/root/repo"}
+    env = {**os.environ, "PYTHONPATH": REPO_ROOT}
     gen = subprocess.run(
         [sys.executable, "-m", "polars_genson_spark.jobs", "generate",
          "--output", corpus_dir, "--rows", "120000", "--seed", "5"],
@@ -335,7 +336,7 @@ def test_semantic_dedup_auto_cluster_sizing(spark):
             (F.col("id") % 5).cast("float"), F.lit(1.0).cast("float")
         ).alias("embedding"),
     )
-    out = semantic_dedup(df, dim=2, cache_entries=False)
+    out = semantic_dedup(df, dim=2)
     assert 0 < out.count() <= 20
 
 
@@ -370,10 +371,7 @@ def test_semantic_dedup_vectorized_assignment_parity(spark, monkeypatch):
             monkeypatch.setattr(sim, "_LITERAL_ASSIGN_MAX", 2)
         else:
             monkeypatch.setattr(sim, "_LITERAL_ASSIGN_MAX", 256)
-        out = sim.semantic_dedup(
-            df, dim=2, centroids=cents, threshold=0.95,
-            cache_entries=False,
-        )
+        out = sim.semantic_dedup(df, dim=2, centroids=cents, threshold=0.95)
         return sorted(
             (
                 r["id"],
@@ -431,8 +429,7 @@ def test_semantic_dedup_gram_join_parity(spark, monkeypatch):
     def run(backend):
         out = sim.semantic_dedup(
             df, dim=3, centroids=cents, threshold=0.98,
-            cache_entries=False, return_discards=True,
-            pair_backend=backend,
+            return_discards=True, pair_backend=backend,
         )
         return sorted(r["id"] for r in out.collect())
 
@@ -452,24 +449,19 @@ def test_semantic_dedup_gram_join_parity(spark, monkeypatch):
     surv_j = sorted(
         r["id"]
         for r in sim.semantic_dedup(
-            df, dim=3, centroids=cents, threshold=0.98,
-            cache_entries=False, pair_backend="join",
+            df, dim=3, centroids=cents, threshold=0.98, pair_backend="join",
         ).collect()
     )
     surv_g = sorted(
         r["id"]
         for r in sim.semantic_dedup(
-            df, dim=3, centroids=cents, threshold=0.98,
-            cache_entries=False, pair_backend="gram",
+            df, dim=3, centroids=cents, threshold=0.98, pair_backend="gram",
         ).collect()
     )
     assert surv_j == surv_g
 
     with __import__("pytest").raises(ValueError, match="pair_backend"):
-        sim.semantic_dedup(
-            df, dim=3, centroids=cents, pair_backend="blas",
-            cache_entries=False,
-        )
+        sim.semantic_dedup(df, dim=3, centroids=cents, pair_backend="blas")
 
 
 def test_bpe_seed_cache_parity(spark):

@@ -58,8 +58,7 @@ def test_null_source_partition_fails_not_passes(spark):
     summary = finalise_summary(report)
     assert summary["all_passed"] is False
     assert summary["failed_partitions"] == [None]
-    report.violations.unpersist()
-    report.verdicts.unpersist()
+    report.release()
 
 
 def test_plan_resume_null_source_key(spark):
@@ -229,9 +228,8 @@ def test_consistency_toggle_and_null_rate(spark):
     report2 = validate_corpus(df, None, cfg2, exact_duplicates=False)
     out2 = {r["source"]: r["passed"] for r in report2.verdicts.collect()}
     assert out2 == {"web": True, "wiki": True}
-    for rep in (report, report2):
-        rep.violations.unpersist()
-        rep.verdicts.unpersist()
+    report.release()
+    report2.release()
 
 
 def test_stream_psi_null_n_tok_starves_not_inflates(spark, tmp_path):

@@ -169,9 +169,7 @@ def test_semantic_dedup_null_probe_ansi_off(spark):
     spark.conf.set("spark.sql.ansi.enabled", "false")
     try:
         df = _vecs(spark, with_null=True)
-        out = semantic_dedup(
-            df, dim=4, n_clusters=2, threshold=0.95, cache_entries=False
-        )
+        out = semantic_dedup(df, dim=4, n_clusters=2, threshold=0.95)
         ids = {r["id"] for r in out.collect()}
         # near-identical pairs (1,2) and (3,4) each lose one member;
         # null vectors survive (they can never match)

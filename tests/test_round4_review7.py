@@ -7,6 +7,7 @@ names, and remote-safe small-file IO plumbing.
 from __future__ import annotations
 
 import pytest
+from conftest import REPO_ROOT
 
 from polars_genson_spark.config import ValidationConfig
 from polars_genson_spark.session import get_spark
@@ -159,7 +160,7 @@ def test_compact_refuses_empty_input(tmp_path):
         ],
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=REPO_ROOT,
         timeout=300,
     )
     assert proc.returncode != 0

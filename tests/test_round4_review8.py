@@ -10,6 +10,7 @@ import subprocess
 import sys
 
 import pytest
+from conftest import REPO_ROOT
 
 
 def _cli(args, stdin_text):
@@ -18,7 +19,7 @@ def _cli(args, stdin_text):
         input=stdin_text,
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=REPO_ROOT,
         timeout=300,
     )
 

@@ -12,7 +12,7 @@ import pytest
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from conftest import make_json_df
+from conftest import make_json_df, persisted_rdd_ids
 from polars_genson_spark import (
     SchemaInferenceError,
     infer_json_schema,
@@ -141,19 +141,13 @@ LEAK_CASES = {
 }
 
 
-def _persisted_ids(spark) -> set[int]:
-    # compare ids, not counts: Spark holds persisted RDDs weakly, so JVM
-    # GC can drop ones that earlier tests left unreferenced mid-test
-    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
-
-
 @pytest.mark.parametrize("name", sorted(LEAK_CASES))
 def test_no_persisted_rdd_left(spark, tmp_path, name):
-    before = _persisted_ids(spark)
+    before = persisted_rdd_ids(spark)
     out = LEAK_CASES[name](spark, _events(spark), tmp_path)
     if isinstance(out, DataFrame):
         assert out.collect()
-    assert _persisted_ids(spark) - before == set()
+    assert persisted_rdd_ids(spark) - before == set()
     if name.startswith("psi_"):
         # the rollup feeds several branches of the one plan; exchange
         # reuse computes its shuffle once without a persist

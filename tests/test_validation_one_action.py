@@ -6,7 +6,7 @@ column)."""
 from __future__ import annotations
 
 import pytest
-from conftest import persisted_rdd_ids
+from conftest import jobs_in, persisted_rdd_ids
 
 from polars_genson_spark.config import ValidationConfig
 from polars_genson_spark.operators.checks import duplicate_rows
@@ -80,16 +80,6 @@ def allowed(spark):
     return allowed_sources_df(spark)
 
 
-def _jobs_in(spark, group: str, fn):
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def _python_rdd_leaves(df) -> list[str]:
     """Debug strings of the LogicalRDD leaves of ``df``'s analyzed plan
     (``createDataFrame(list)`` builds one over ``applySchemaToPythonRDD``)."""
@@ -109,14 +99,14 @@ def test_one_action_job_budget(spark, corpus, allowed):
         report.violations.count()
         return report
 
-    report, n_jobs = _jobs_in(spark, "one_action_budget", op)
+    report, n_jobs = jobs_in(spark, "one_action_budget", op)
     report.release()
     assert n_jobs <= 10, f"validate + summary + violations.count ran {n_jobs} jobs"
 
 
 def test_finalise_summary_runs_no_job(spark, corpus, allowed):
     report = validate_corpus(corpus, allowed)
-    summary, n_jobs = _jobs_in(
+    summary, n_jobs = jobs_in(
         spark, "finalise_no_job", lambda: finalise_summary(report)
     )
     report.release()
@@ -188,19 +178,26 @@ def test_input_cache_released_before_return(spark):
 
 
 def test_null_doc_ids_are_not_duplicates(spark):
-    df = local_frame(
-        spark,
-        [(None, [1], 1, "web"), (None, [2], 1, "web"), ("a", [3], 1, "web")],
-        CORPUS_SCHEMA,
-    )
+    # "d" is duplicated across web and the NULL source, a partition too
+    rows = [(None, [1], 1, "web"), (None, [2], 1, "web"), ("a", [3], 1, "web"),
+            ("d", [4], 1, None), ("d", [5], 1, "web"), ("e", [6], 1, None)]
+    df = local_frame(spark, rows, CORPUS_SCHEMA)
     report = validate_corpus(df, None, ValidationConfig(check_drift=False))
-    row = finalise_summary(report)["per_partition"]["web"]
-    assert row["consistency_violations"] == 2
-    assert row["duplicate_rows"] == 0
-    checks = sorted(r["check"] for r in report.violations.collect())
-    assert checks == ["consistency", "consistency"]
+    per = finalise_summary(report)["per_partition"]
+    assert {
+        s: (r["consistency_violations"], r["duplicate_rows"])
+        for s, r in per.items()
+    } == {"web": (2, 1), None: (0, 1)}
+    checks = sorted(
+        (r["check"], r["source"] or "") for r in report.violations.collect()
+    )
+    assert checks == [("consistency", "web")] * 2 + [
+        ("uniqueness", ""), ("uniqueness", "web"),
+    ]
     report.release()
-    assert duplicate_rows(df).count() == 0
+    assert [r["sources"] for r in duplicate_rows(df).collect()] == [
+        ["web", None]
+    ]
 
 
 def test_renamed_source_column(spark, corpus, allowed):

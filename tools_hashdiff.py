@@ -14,11 +14,12 @@ Usage: python tools_hashdiff.py [query ...]   (default: all oracled)
 from __future__ import annotations
 
 import math
+import pathlib
 import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent))
 
 import __spark_entry__ as E  # noqa: E402
 
